@@ -31,6 +31,23 @@ object Schemas {
     StructField("artist_longitude", DoubleType)
   ))
 
+  /** The `songs` table the song stage writes: these `songData` fields,
+    * partitioned by year and artist_id. The log stage re-reads it with
+    * this schema, so writer and reader share one definition. */
+  val songs: StructType =
+    StructType(Seq("song_id", "title", "artist_id", "year", "duration").map(songData(_)))
+
+  /** `artists` columns as (songData field, table column) renames. */
+  val artistRenames: Seq[(String, String)] = Seq(
+    "artist_id" -> "artist_id", "artist_name" -> "name",
+    "artist_location" -> "location", "artist_latitude" -> "latitude",
+    "artist_longitude" -> "longitude")
+
+  /** The `artists` table the song stage writes (unpartitioned). */
+  val artists: StructType = StructType(artistRenames.map { case (from, to) =>
+    songData(from).copy(name = to)
+  })
+
   /** log_data three-deep glob — newline-delimited activity events (etl.py:78,87). */
   val logData: StructType = StructType(Seq(
     StructField("page", StringType),

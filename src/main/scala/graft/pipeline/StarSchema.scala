@@ -32,21 +32,21 @@ object StarSchema {
     * year, artist_id) and `artists` (deduped, unpartitioned). */
   def processSongData(spark: SparkSession, songJsonGlob: String, outDir: String): Unit = {
     // Both table builds consume the same JSON scan; persist so the glob is
-    // listed and parsed once, not once per sink (JSON parsing is the
-    // dominant cost of this stage — there is no parquet pushdown to lose).
+    // listed and parsed once, not once per sink (there is no parquet
+    // pushdown to lose). With one file per song, listing the files cost as
+    // much as parsing them — the listing job was about half of this stage
+    // while it ran one task per file; Tables.bootstrap caps it at one task
+    // per core.
     // Registered via Caches (the repo cache contract) so an exception
     // between persist and the prompt unpersist below still gets released
     // at the next query boundary; the finally keeps the prompt path.
     val raw = Caches.persisted(
       Tables.readJson(spark, Schemas.songData, songJsonGlob))
     try {
-      val songs = raw.select("song_id", "title", "artist_id", "year", "duration")
+      val songs = raw.select(Schemas.songs.fieldNames.toIndexedSeq.map(col): _*)
       writePartitioned(songs, s"$outDir/songs", Seq("year", "artist_id"))
 
-      val artists = dedupAll(projectRename(raw,
-        "artist_id" -> "artist_id", "artist_name" -> "name",
-        "artist_location" -> "location", "artist_latitude" -> "latitude",
-        "artist_longitude" -> "longitude"))
+      val artists = dedupAll(projectRename(raw, Schemas.artistRenames: _*))
       writePartitioned(artists, s"$outDir/artists", Seq.empty)
     } finally raw.unpersist()
   }
@@ -82,10 +82,13 @@ object StarSchema {
     // songplays: J3 songs x artists lookup from the MATERIALIZED parquet,
     // then the load-bearing J4 left join on (song=title, artist=name) —
     // unmatched plays survive with null song_id/artist_id (etl.py:141-174).
-    val songs = readTable(spark, s"$outDir/songs")
-      .select("song_id", "title", "artist_id")
-    val artists = readTable(spark, s"$outDir/artists")
-      .select(col("artist_id").as("artist_id1"), col("name"))
+    // The re-reads take the song stage's schemas from Schemas instead of
+    // inferring them, which would cost one footer job per table.
+    val songs = readTable(spark, s"$outDir/songs", Schemas.songs)
+      .select(lookupColumns("songs").map(col): _*)
+    val artists = readTable(spark, s"$outDir/artists", Schemas.artists)
+      .select(lookupColumns("artists").map(col): _*)
+      .withColumnRenamed("artist_id", "artist_id1")
     val lookup = dimJoin(songs, artists, col("artist_id") === col("artist_id1"))
       .select("song_id", "title", "artist_id", "name")
 
@@ -106,6 +109,11 @@ object StarSchema {
     writePartitioned(songplays, s"$outDir/songplays", Seq("year", "month"))
     } finally plays.unpersist()
   }
+
+  /** The columns the log stage reads back from each song-stage table. */
+  val lookupColumns: Map[String, Seq[String]] = Map(
+    "songs" -> Seq("song_id", "title", "artist_id"),
+    "artists" -> Seq("artist_id", "name"))
 
   /** main()-equivalent (etl.py:177-188): song data first — the log stage
     * re-reads its parquet output. */

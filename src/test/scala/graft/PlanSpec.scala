@@ -490,6 +490,59 @@ class PlanSpec extends SparkTestBase {
     assert(!plan.contains("Join"), s"join leaked into the plan:\n$plan")
   }
 
+  test("preferValueAll plans one Window and no Join") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, Window}
+    val plan = SparkEntry.queries("q_prefer_status_all")(spark, sfDir)
+      .queryExecution.optimizedPlan
+    assert(plan.collect { case w: Window => w }.size === 1, plan.treeString)
+    assert(plan.collect { case j: Join => j }.isEmpty, plan.treeString)
+  }
+
+  test("a glob above the 32-path listing threshold lists in one task per core") {
+    // Tables.bootstrap caps Spark's parallel file listing at
+    // defaultParallelism; without it the listing job runs one task per file.
+    import java.nio.file.Files
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+    val root = Files.createTempDirectory("graft_listing")
+    for (i <- 0 until 40) {
+      val f = root.resolve(s"d${i % 4}/f$i.json")
+      Files.createDirectories(f.getParent)
+      Files.writeString(f, s"""{"id":$i}""")
+    }
+    val sc = spark.sparkContext
+    val (listing, marker) = ("graft-listing", "graft-listing-marker")
+    val jobTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val markerDone = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case `listing` => jobTasks.add(e.stageInfos.map(_.numTasks).sum)
+          case `marker` => markerJob.set(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      // building the frame lists the 40 globbed files (the schema is
+      // given, so nothing else runs)
+      sc.setJobGroup(listing, listing)
+      val df = try spark.read.schema("id LONG").json(s"$root/*/*.json")
+        finally sc.clearJobGroup()
+      assert(df.inputFiles.length === 40)
+      // listener events arrive in order: once a job started after the
+      // listing has ended, every listing job has been seen
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val tasks = scala.jdk.CollectionConverters.CollectionHasAsScala(jobTasks).asScala.toSeq
+      assert(tasks.nonEmpty, "40 paths should list in a Spark job")
+      assert(tasks.forall(_ <= sc.defaultParallelism), tasks)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("no judged query plans a cartesian product") {
     // The ANN/brute-force vector joins are inequality-join by design but
     // keep an equi component (bucket) or broadcast; nothing should fall

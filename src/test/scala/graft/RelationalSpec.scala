@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.rng.Seed
 
 import graft.operators.Relational._
 
@@ -48,6 +49,43 @@ class RelationalSpec extends SparkTestBase {
     val out = preferValueAll(df, "user_id", "level", "paid")
       .as[(Long, String, String)].collect().toSet
     assert(out === Set((1L, "paid", "y"), (2L, "free", "z")))
+  }
+
+  /** (key, value, payload) rows of the preferValueAll property. */
+  private type R = (Option[Int], Option[String], Int)
+
+  test("preferValueAll equals a plain-Scala model on random small frames (property)") {
+    // distinct rows, then drop the non-null, non-preferred rows of every
+    // non-null key that has a preferred row
+    def model(rows: List[R]): List[R] = {
+      val d = rows.distinct
+      val preferredKeys = d.collect { case (Some(k), Some("paid"), _) => k }.toSet
+      d.filterNot { case (k, v, _) =>
+        k.exists(preferredKeys) && v.exists(_ != "paid")
+      }.sorted
+    }
+    def run(rows: List[R]): List[R] =
+      preferValueAll(rows.toDF("k", "level", "p"), "k", "level", "paid")
+        .as[R].collect().toList.sorted
+    // null keys, null values, three values on one key, duplicate rows
+    val edges: List[R] = List(
+      (None, Some("paid"), 0), (None, Some("free"), 0), (Some(1), None, 0),
+      (Some(1), Some("paid"), 0), (Some(1), Some("free"), 1),
+      (Some(1), Some("trial"), 0), (Some(1), Some("free"), 1),
+      (Some(2), None, 0), (Some(2), Some("free"), 0), (Some(2), Some("trial"), 0))
+    assert(run(edges) === model(edges))
+
+    val row: Gen[R] = Gen.zip(
+      Gen.option(Gen.choose(1, 3)),
+      Gen.option(Gen.oneOf("paid", "free", "trial")),
+      Gen.choose(0, 1))
+    val frames = Gen.choose(0, 12).flatMap(n => Gen.listOfN(n, row))
+      .flatMap(rs => Gen.someOf(rs).map(dups => rs ++ dups))
+    val r = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(25)
+        .withInitialSeed(Seed(20181101L)),
+      Prop.forAll(frames)(rows => run(rows) == model(rows)))
+    assert(r.passed, r.status.toString)
   }
 
   test("epochMsToTs preserves sub-second milliseconds exactly (C1)") {

@@ -81,6 +81,20 @@ class StarSchemaSpec extends SparkTestBase {
         "artist_id", "session_id", "location", "user_agent", "year", "month"))
   }
 
+  test("the log stage's pinned songs/artists schemas match what parquet infers") {
+    // processLogData re-reads the song stage's output with Schemas.songs /
+    // Schemas.artists instead of inferring; the columns it selects must
+    // type exactly as inference would type the real output.
+    val pinned = Map("songs" -> graft.engine.Schemas.songs,
+      "artists" -> graft.engine.Schemas.artists)
+    for ((name, cols) <- StarSchema.lookupColumns) {
+      val inferred = table(name).select(cols.map(col): _*).schema
+      val read = spark.read.schema(pinned(name)).parquet(s"$outDir/$name")
+        .select(cols.map(col): _*).schema
+      assert(read === inferred, name)
+    }
+  }
+
   test("partition layouts match the reference (etl.py:51,137,173)") {
     def dirs(p: String) = new java.io.File(p).listFiles()
       .filter(_.isDirectory).map(_.getName).toSet
