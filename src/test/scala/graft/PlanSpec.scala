@@ -543,6 +543,24 @@ class PlanSpec extends SparkTestBase {
     } finally sc.removeSparkListener(listener)
   }
 
+  test("a compiled class outlives more distinct plans than Spark's default cache holds") {
+    // Tables.bootstrap sizes Spark's generated-class cache; at Spark's
+    // default of 100 entries the 150 distinct plans below evict the first
+    // plan's class and its re-run compiles it again.
+    import org.apache.spark.metrics.source.CodegenMetrics
+    assert(spark.conf.get(Tables.CodegenCacheKey) === Tables.CodegenCacheEntries.toString)
+    // a primitive literal is inlined into the generated source, so each
+    // factor yields a class of its own
+    def run(factor: Int): Unit =
+      spark.range(8).select((col("id") * lit(factor)).as("x")).collect()
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run(-1)
+    (1 to 150).foreach(run)
+    val before = compiles
+    run(-1)
+    assert(compiles === before, "the first plan's class was evicted")
+  }
+
   test("no judged query plans a cartesian product") {
     // The ANN/brute-force vector joins are inequality-join by design but
     // keep an equi component (bucket) or broadcast; nothing should fall
