@@ -1,155 +1,88 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.util.AccumulatorV2
 
 /** The per-round materialization barrier for iterative operators
-  * (connected components, PageRank, BFS, the skew-profile fan-out).
+  * (connected components, PageRank, BFS, BPE merges, OPTIMIZE rewrites).
   *
-  * Two jobs in one call: (1) EAGER materialization — round N's plan must
-  * not embed round N−1's plan, or the tree grows exponentially (repo
-  * rule; r5's q_cc_labels OOM'd explainString that way); (2) lineage
-  * durability, where the two modes differ:
+  * Every entry point is a view of ONE counted materialization: the
+  * plan's rows are copied, marked for checkpointing and counted by a
+  * single `count()`, and the count becomes the new leaf's statistics
+  * ([[GraftSqlBridge.fromCheckpointedRdd]]). That gives two things:
+  * (1) EAGER materialization, so round N's plan does not embed round
+  * N−1's (repo rule; r5's q_cc_labels OOM'd explainString that way);
+  * (2) a leaf with MEASURED stats, so a cut→join→cut loop cannot
+  * compound inherited join-size products (BarriersSpec's cap test).
   *
-  *  - `localCheckpoint(eager = true)` (the default): blocks are
-  *    EXECUTOR-RESIDENT. Fastest, and correct on a healthy cluster — but
-  *    a lost executor loses blocks whose lineage was just truncated, and
-  *    the job dies. The right trade in local mode and short jobs.
-  *  - `checkpoint(eager = true)`: blocks go to the RELIABLE checkpoint
-  *    directory (`spark.sparkContext.setCheckpointDir`, typically
-  *    HDFS/object storage on a real cluster). Survives executor churn —
-  *    the production posture for long iterative jobs at 100 TB, paying
-  *    one distributed-FS write per round of (long,long)-scale state.
+  * Durability is picked off the session:
+  *  - no checkpoint dir (the default): `localCheckpoint`, blocks are
+  *    EXECUTOR-RESIDENT — fastest, but a lost executor loses blocks whose
+  *    lineage was truncated. One job per call.
+  *  - a checkpoint dir (`sparkContext.setCheckpointDir`, typically
+  *    HDFS/object storage): a RELIABLE checkpoint that survives executor
+  *    churn. Spark writes the files in a second job after the count; the
+  *    rows are cached (MEMORY_AND_DISK) for that write so it reads the
+  *    cached blocks instead of re-running the plan, then released. Two
+  *    jobs per call, the plan evaluated once.
   *
-  * The mode is picked off the session: callers opt in to reliability by
-  * configuring a checkpoint dir (one line at bootstrap), and every
-  * iterative operator in the library follows without per-operator flags.
-  * Results are identical either way (asserted in BarriersSpec) — only
-  * failure-recovery semantics change.
+  * Results are identical either way (BarriersSpec pins both modes).
   */
 object Barriers {
 
-  /** Materialize `df` eagerly and cut its lineage, reliably iff the
-    * session has a checkpoint directory configured. */
-  def cut(df: DataFrame): DataFrame = {
-    val c = if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      // checkpoint(eager) runs TWO jobs — the eager count, then the
-      // checkpoint-file write — and on an unpersisted plan the second
-      // re-executes the full lineage, doubling every round of an
-      // iterative operator. Cache for the duration so the plan runs
-      // once; release right after (the checkpoint files are now the
-      // source of truth).
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try df.checkpoint(eager = true)
-      finally df.unpersist(blocking = false)
-    } else df.localCheckpoint(eager = true)
-    // Checkpointing copies the ORIGINAL plan's sizeInBytes onto the new
-    // leaf, and the size-only stats visitor takes the PRODUCT of child
-    // sizes at every inner/outer join — so a cut→join→cut iteration
-    // compounds sizeInBytes multiplicatively across rounds. The BigInt
-    // stays semantically harmless (anything huge reads "don't
-    // broadcast") but its DIGIT COUNT grows geometrically, and after
-    // enough rounds the next cut's eager stats pass hangs for minutes
-    // inside BigInteger.multiply (hit by the SCC trim loop, r15).
-    // Rebuilding the frame over the already-materialized RDD resets the
-    // leaf to the honest default size; only frames past the absurdity
-    // bar (2^127 bytes) pay the Row round-trip.
-    if (c.queryExecution.optimizedPlan.stats.sizeInBytes.bitLength <= 127) c
-    else df.sparkSession.createDataFrame(c.rdd, c.schema)
+  /** Materialize `df` eagerly and cut its lineage. */
+  def cut(df: DataFrame): DataFrame = materialize(df, None)._1
+
+  /** [[cut]] plus the materialized row count, from the same job — hop
+    * loops test convergence ("frontier empty") without a second action. */
+  def cutCounted(df: DataFrame): (DataFrame, Long) = {
+    val (c, n, _) = materialize(df, None)
+    (c, n)
   }
 
-  /** [[cut]] plus the materialized ROW COUNT — measured by the same job
-    * that does the materialization. Spark's eager checkpoint runs a
-    * `count()` over the checkpointed RDD internally and DISCARDS the
-    * result; this keeps it, so hop loops can test convergence
-    * ("frontier empty", "edge set stopped shrinking") without a second
-    * per-round action. At 2 actions/round across dozens of rounds per
-    * query, that second job (scheduling + a fresh Catalyst pass) was a
-    * measurable slice of the CC-family wall time (r18).
-    *
-    * The reliable-checkpoint posture falls back to [[cut]] + one count
-    * job over the materialized leaf — that posture already pays a
-    * distributed-FS write per round, and results are identical either
-    * way (BarriersSpec pins both modes). The rebuilt leaf carries
-    * honest (count, count×width) stats instead of the copied-origin
-    * sizeInBytes, so the compounding-product hang [[cut]] guards
-    * against cannot arise here. */
-  def cutCounted(df: DataFrame): (DataFrame, Long) =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      val c = cut(df)
-      (c, c.count())
-    } else {
-      // the Dataset.localCheckpoint(eager) mechanics, inlined so the
-      // materializing count() is kept: copy (UnsafeRow buffers are
-      // reused per partition), mark, count-to-materialize, rewrap
-      val rdd = df.queryExecution.toRdd.map(_.copy())
-      rdd.localCheckpoint()
-      val n = rdd.count()
-      (org.apache.spark.sql.GraftSqlBridge.fromCheckpointedRdd(df, rdd, n), n)
-    }
+  /** [[cutCounted]] plus an order-independent XOR of `hash(row)` over the
+    * materialized rows, folded by the same job. Fingerprint only: a
+    * re-executed task can double-fold (accumulator updates in
+    * transformations are not exactly-once), so callers MUST confirm a
+    * match exactly before acting on it, as
+    * [[graft.operators.Dedup.connectedComponents]] does with `exceptAll`.
+    * `hash` reads the physical InternalRow. */
+  def cutFingerprinted(df: DataFrame, hash: InternalRow => Long)
+      : (DataFrame, Long, Long) = materialize(df, Some(hash))
 
-  /** Order-independent 64-bit XOR accumulator for
-    * [[cutFingerprinted]]. */
-  private final class XorAccumulator
-      extends org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long] {
+  private def materialize(df: DataFrame, hash: Option[InternalRow => Long])
+      : (DataFrame, Long, Long) = {
+    val sc = df.sparkSession.sparkContext
+    val xor = new XorAccumulator
+    // rows are copied: UnsafeRow buffers are reused per partition
+    val rdd = hash match {
+      case Some(h) =>
+        sc.register(xor, "graft.cutFingerprint")
+        df.queryExecution.toRdd.map { r => xor.add(h(r)); r.copy() }
+      case None => df.queryExecution.toRdd.map(_.copy())
+    }
+    val reliable = sc.getCheckpointDir.isDefined
+    if (reliable) { rdd.persist(StorageLevel.MEMORY_AND_DISK); rdd.checkpoint() }
+    else rdd.localCheckpoint()
+    val n = try rdd.count() finally if (reliable) rdd.unpersist(blocking = false)
+    (GraftSqlBridge.fromCheckpointedRdd(df, rdd, n), n, xor.value)
+  }
+
+  /** Order-independent 64-bit XOR accumulator. */
+  private final class XorAccumulator extends AccumulatorV2[Long, Long] {
     private var v = 0L
     override def isZero: Boolean = v == 0L
-    override def copy(): XorAccumulator = {
-      val a = new XorAccumulator; a.v = v; a
-    }
+    override def copy(): XorAccumulator = { val a = new XorAccumulator; a.v = v; a }
     override def reset(): Unit = v = 0L
-    override def add(x: java.lang.Long): Unit = v ^= x.longValue
-    override def merge(
-        o: org.apache.spark.util.AccumulatorV2[java.lang.Long, java.lang.Long])
-        : Unit = v ^= o.value.longValue
-    override def value: java.lang.Long = v
+    override def add(x: Long): Unit = v ^= x
+    override def merge(o: AccumulatorV2[Long, Long]): Unit = v ^= o.value
+    override def value: Long = v
   }
 
-  /** [[cutCounted]] plus an order-independent XOR of `hash(row)` over
-    * the materialized rows, folded by the SAME job (per-partition
-    * accumulation) — the convergence FINGERPRINT of
-    * [[graft.operators.Dedup.connectedComponents]] for free. Fingerprint
-    * only: an accumulator update from a re-executed task can double-fold
-    * (Spark's exactly-once guarantee covers actions, not
-    * transformations), so callers MUST confirm a match with an exact
-    * check before acting on it — the CC contract already does
-    * (`exceptAll` on the convergence round); a spurious MISmatch merely
-    * costs one extra round, re-fingerprinted fresh. The
-    * reliable-checkpoint posture folds (count, xor) in one extra pass
-    * over the materialized leaf instead. `hash` reads the physical
-    * InternalRow — callers know their column layout. */
-  def cutFingerprinted(df: DataFrame,
-      hash: org.apache.spark.sql.catalyst.InternalRow => Long)
-      : (DataFrame, Long, Long) =
-    if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      val c = cut(df)
-      val (n, x) = c.queryExecution.toRdd.mapPartitions { it =>
-        var n = 0L; var x = 0L
-        it.foreach { r => n += 1; x ^= hash(r) }
-        Iterator((n, x))
-      }.fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 ^ b._2))
-      (c, n, x)
-    } else {
-      val sc = df.sparkSession.sparkContext
-      val xAcc = new XorAccumulator
-      sc.register(xAcc, "graft.cutFingerprint")
-      val rdd = df.queryExecution.toRdd.mapPartitions { it =>
-        new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-          override def hasNext: Boolean = it.hasNext
-          override def next(): org.apache.spark.sql.catalyst.InternalRow = {
-            val r = it.next(); xAcc.add(hash(r)); r.copy()
-          }
-        }
-      }
-      rdd.localCheckpoint()
-      val n = rdd.count()
-      (org.apache.spark.sql.GraftSqlBridge.fromCheckpointedRdd(df, rdd, n),
-        n, xAcc.value.longValue)
-    }
-
-  /** Postfix form: `plan.barrierCut` reads like the
-    * `.localCheckpoint(true)` it replaces. */
+  /** Postfix form: `plan.barrierCut`. */
   implicit class BarrierOps(private val df: DataFrame) extends AnyVal {
     def barrierCut: DataFrame = cut(df)
-    def barrierCutCounted: (DataFrame, Long) = cutCounted(df)
   }
 }

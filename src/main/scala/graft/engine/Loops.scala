@@ -14,26 +14,21 @@ import org.apache.spark.sql.SparkSession
   * generalized to hop loops. The r17 rule hardcoded 4 for a few
   * operators; r18 replaces the constant with SIZE-DERIVED sizing so the
   * same code is right in local mode AND on a cluster: partitions =
-  * clamp(rows / rowsPerPartition, 4, session shuffle partitions). The
-  * divisor is the knob (SPARK_GRAFT_LOOP_ROWS_PER_PART, default 250k
-  * rows ≈ a few MB of bare-long state per task); the session partition
-  * count stays the upper bound, so cluster deployments with large
-  * graphs keep their full parallelism.
+  * clamp(ceil(rows / RowsPerPartition), 4, session shuffle partitions).
+  * 250k rows is a few MB of bare-long state per task; the session
+  * partition count stays the upper bound, so cluster deployments with
+  * large graphs keep their full parallelism.
   */
 object Loops {
 
-  private val rowsPerPart: Long = {
-    val v = sys.env.getOrElse("SPARK_GRAFT_LOOP_ROWS_PER_PART", "250000")
-    require(v.toLong > 0, s"bad SPARK_GRAFT_LOOP_ROWS_PER_PART=$v")
-    v.toLong
-  }
+  val RowsPerPartition = 250000L
 
   /** Loop partition count for a loop whose per-round state carries
     * ~`rows` rows: never below 4 (skew headroom on tiny graphs), never
     * above the session's configured shuffle partitions. */
   def partitionsFor(session: SparkSession, rows: Long): Int = {
     val cap = session.conf.get("spark.sql.shuffle.partitions").toInt
-    val want = math.max(4L, (rows + rowsPerPart - 1) / rowsPerPart)
+    val want = math.max(4L, (rows + RowsPerPartition - 1) / RowsPerPartition)
     math.min(cap.toLong, want).toInt
   }
 

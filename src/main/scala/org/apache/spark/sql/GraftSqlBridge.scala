@@ -6,16 +6,20 @@ import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Package-scope bridge into the `private[sql]` constructor surface
-  * that [[graft.engine.Barriers.cutCounted]] needs: rebuilding a
-  * DataFrame over an already-checkpointed InternalRow RDD. The public
+  * that [[graft.engine.Barriers]] needs: every cut leaf, in either
+  * checkpoint mode, is a DataFrame rebuilt here over the already
+  * materialized InternalRow RDD. The public
   * `createDataFrame(RDD[Row], schema)` would pay an InternalRow -> Row
   * decode per row per downstream action; this keeps the binary rows,
-  * exactly like `Dataset.localCheckpoint(eager = true)` does
-  * internally — minus its copied-origin-stats (the compounding
-  * sizeInBytes problem Barriers documents): the leaf gets HONEST
-  * statistics instead, from the row count the materialization job just
-  * measured and the schema's fixed width. Mechanics are public
-  * knowledge (the Spark source); no behavior of Spark is modified.
+  * like `Dataset.localCheckpoint`/`checkpoint` do internally, minus
+  * their copied-origin statistics (a cut→join→cut loop would compound
+  * the inherited join-size products): the leaf gets MEASURED statistics
+  * instead, the row count the materialization job just took times the
+  * schema's fixed width. The rows stay cached during a reliable
+  * checkpoint's file write (see Barriers), so the leaf's RDD is read
+  * from the checkpoint files afterwards, never recomputed from the
+  * plan. Mechanics are public knowledge (the Spark source); no behavior
+  * of Spark is modified.
   */
 object GraftSqlBridge {
 

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.engine.Barriers
@@ -10,7 +14,8 @@ import graft.operators.{Dedup, Graph}
 /** The reliable-checkpoint seam (r7 VERDICT #3): iterative operators cut
   * per-round lineage through [[Barriers.cut]], which is executor-resident
   * `localCheckpoint` locally and durable `checkpoint` when the session
-  * has a checkpoint directory — results must be identical either way.
+  * has a checkpoint directory — results must be identical either way,
+  * and every entry point is one counted materialization in both modes.
   */
 class BarriersSpec extends SparkTestBase {
   import spark.implicits._
@@ -27,6 +32,48 @@ class BarriersSpec extends SparkTestBase {
     }
   }
 
+  /** Calls `barrier` on a fresh 3,000-row, 4-partition frame whose rows
+    * tick an accumulator, and checks the single-materialization contract:
+    * 1 job locally, at most 2 reliably (count + checkpoint-file write),
+    * the plan evaluated once, and a leaf that carries the measured row
+    * count. Jobs are counted by job group; a marker job in a second group
+    * flushes the listener bus (events arrive in order). */
+  private def assertOneMaterialization(barrier: DataFrame => DataFrame): Unit = {
+    val rows = 3000L
+    val evaluated = spark.sparkContext.longAccumulator("graft.rowsEvaluated")
+    val tick = udf { (x: Long) => evaluated.add(1L); x }.asNondeterministic()
+    val df = spark.range(0L, rows, 1L, 4).select(tick(col("id")).as("k"))
+    val sc = spark.sparkContext
+    val (group, marker) = ("graft-barrier", "graft-barrier-marker")
+    val jobs = new AtomicInteger(0)
+    val markerJob = new AtomicInteger(-1)
+    val markerDone = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        e.properties.getProperty("spark.jobGroup.id") match {
+          case `group` => jobs.incrementAndGet()
+          case `marker` => markerJob.set(e.jobId)
+          case _ =>
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get) markerDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    val leaf = try {
+      sc.setJobGroup(group, group)
+      val leaf = try barrier(df) finally sc.clearJobGroup()
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerDone.await(60, TimeUnit.SECONDS))
+      leaf
+    } finally sc.removeSparkListener(listener)
+    if (sc.getCheckpointDir.isDefined) assert(jobs.get <= 2, "jobs per call")
+    else assert(jobs.get === 1, "jobs per call")
+    assert(evaluated.value === rows, "the plan ran more than once")
+    assert(leaf.queryExecution.optimizedPlan.stats.rowCount === Some(BigInt(rows)))
+    assert(leaf.count() === rows)
+  }
+
   test("Barriers.cut picks reliable checkpoint iff a checkpoint dir is set") {
     val df = Seq(1, 2, 3).toDF("x")
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
@@ -39,7 +86,9 @@ class BarriersSpec extends SparkTestBase {
       val files = org.apache.commons.io.FileUtils
         .listFiles(ckptRoot, null, true)
       assert(!files.isEmpty, s"no checkpoint files under $ckptRoot")
+      assertOneMaterialization(Barriers.cut)
     }
+    assertOneMaterialization(Barriers.cut)
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
   }
 
@@ -83,6 +132,11 @@ class BarriersSpec extends SparkTestBase {
         .sizeInBytes.bitLength <= 127)
       val (cutE, nE) = Barriers.cutCounted(df.filter(col("k") < 0))
       assert(nE === 0L && cutE.isEmpty)
+      assertOneMaterialization { d =>
+        val (c, n) = Barriers.cutCounted(d)
+        assert(n === 3000L)
+        c
+      }
     }
     check() // localCheckpoint path
     withCheckpointDir(check()) // reliable path
@@ -114,15 +168,25 @@ class BarriersSpec extends SparkTestBase {
     // reliable-checkpoint mode: same rows, same count, same fingerprint
     val (rows4, n4, x4) = withCheckpointDir(run(a.repartition(2)))
     assert(rows4 === rows1 && n4 === 3L && x4 === x1)
+    // one materialization in both modes; the fold sees each row once
+    val expected = (0L until 3000L).foldLeft(0L)((acc, k) => acc ^ (k * 1000003L))
+    def fingerprinted(d: DataFrame): DataFrame = {
+      val (c, n, x) = Barriers.cutFingerprinted(d, r => r.getLong(0) * 1000003L)
+      assert(n === 3000L && x === expected)
+      c
+    }
+    assertOneMaterialization(fingerprinted)
+    withCheckpointDir(assertOneMaterialization(fingerprinted))
   }
 
   test("Barriers.cut caps inherited sizeInBytes across cut-join-cut rounds") {
-    // checkpointing copies the input plan's sizeInBytes onto the new
-    // leaf and joins take the PRODUCT of child sizes, so an iterated
-    // cut->join->cut loop compounds the stat multiplicatively — by
-    // round ~20 the BigInt has millions of digits and the next cut's
-    // eager stats pass hangs in BigInteger.multiply (the r15 SCC trim
-    // regression). The cap rebuilds any leaf past 2^127 bytes.
+    // a leaf that inherits the input plan's sizeInBytes (what
+    // Dataset.checkpoint does) would compound it multiplicatively across
+    // an iterated cut->join->cut loop, since joins take the PRODUCT of
+    // child sizes — by round ~20 the BigInt has millions of digits and
+    // the next cut's eager stats pass hangs in BigInteger.multiply (the
+    // r15 SCC trim regression). The bound holds because every cut leaf
+    // carries measured stats (its row count × schema width).
     var df = Barriers.cut(Seq((1L, 2L), (2L, 3L)).toDF("u", "v"))
     for (_ <- 1 to 25) {
       val other = df.select(col("u").as("u2"), col("v").as("v2"))

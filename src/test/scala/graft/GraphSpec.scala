@@ -8,6 +8,26 @@ import graft.operators.Graph
 class GraphSpec extends SparkTestBase {
   import spark.implicits._
 
+  test("Loops.partitionsFor: at least 4, at most the session's shuffle partitions") {
+    import graft.engine.Loops
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val r = Loops.RowsPerPartition
+    try {
+      spark.conf.set(key, "64")
+      assert(Loops.partitionsFor(spark, 0L) === 4)
+      assert(Loops.partitionsFor(spark, 4 * r) === 4)
+      // ceiling division in between
+      assert(Loops.partitionsFor(spark, 5 * r) === 5)
+      assert(Loops.partitionsFor(spark, 5 * r + 1) === 6)
+      assert(Loops.partitionsFor(spark, 1000 * r) === 64)
+      // the session's partition count wins over the floor of 4
+      spark.conf.set(key, "2")
+      assert(Loops.partitionsFor(spark, 0L) === 2)
+      assert(Loops.partitionsFor(spark, 1000 * r) === 2)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("pageRank matches the hand-computed recurrence after one iteration") {
     // 1->2, 1->3, 2->3, 3->1; N=3, r0 = 1/3 each, deg(1)=2, deg(2)=deg(3)=1
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
