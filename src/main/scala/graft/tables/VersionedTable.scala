@@ -3,6 +3,8 @@ package graft.tables
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType,
+  FloatType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Versioned table format: a commit log of immutable data directories.
   *
@@ -174,11 +176,7 @@ object VersionedTable {
   /** Highest committed version, or 0 if the table does not exist. */
   def latestVersion(spark: SparkSession, root: String): Int = {
     val (fs, rootP) = fsOf(spark, root)
-    val log = new Path(rootP, LogDir)
-    if (!fs.exists(log)) 0
-    else fs.listStatus(log).map(_.getPath.getName)
-      .filter(_.matches("\\d{8}\\.json"))
-      .map(_.take(8).toInt).foldLeft(0)(math.max)
+    existingVersions(fs, rootP).lastOption.getOrElse(0)
   }
 
   /** Atomic commit of `m` as version `m.version`: the manifest is fully
@@ -186,8 +184,11 @@ object VersionedTable {
     * [[graft.operators.Relational.vacuumStaging]]-style sweeps), then
     * renamed into the log. A concurrent committer that won the race leaves
     * the destination present → this commit fails with the data dir swept,
-    * the winner's log intact. */
-  private def commit(fs: FileSystem, root: Path, m: Manifest): Manifest =
+    * the winner's log intact. Package-visible like [[commitAppendLoop]]:
+    * the spec drives a lost publish race through it by name, and a
+    * private member that the nested [[Snapshot]] calls would not keep
+    * its name in bytecode. */
+  private[graft] def commit(fs: FileSystem, root: Path, m: Manifest): Manifest =
     publishManifest(fs, new Path(root, LogDir), manifestPath(root, m.version), m)
 
   /** The atomic manifest publish commit() and branch commits share:
@@ -238,19 +239,188 @@ object VersionedTable {
     m
   }
 
-  /** Exclusive data-dir allocation: claim the first free `d-%08d` at or
-    * above `startV` by atomically creating its `.claim` marker
-    * (`create(overwrite = false)` — exclusive on HDFS), then write with
-    * APPEND semantics into the claimed-and-fresh directory. Nothing is
-    * ever overwritten: a concurrent writer racing for the same number
-    * loses the claim and takes the next one, so the losing commit can
-    * never have clobbered the winner's bytes (the hazard an
-    * overwrite-by-version-number convention would carry). Crash orphans
-    * — claimed or written but never referenced by a manifest — are
-    * exactly what [[vacuum]] reclaims; dir numbers may therefore run
-    * ahead of versions, which nothing assumes away (manifests reference
-    * dirs by NAME). The dot-prefixed marker is invisible to parquet
-    * readers and to `d-\\d{8}` sweeps. */
+  // ---- per-operation snapshot and the copy-on-write kernel --------------
+
+  /** One operation's view of the table: the filesystem, the base manifest
+    * (latest, or `at` for time travel) found from ONE `_log` listing, and
+    * everything derived from it.
+    *
+    * Lazy-log rule: [[log]] (the manifests up to the base, each read
+    * once) and everything built from it (the rename, drop and widen
+    * chains, the union [[schema]], the tombstone scopes) are lazy. An
+    * append or a metadata-only commit reads the base manifest alone; a
+    * rewrite or a mapped read pays ONE pass over the log however many
+    * chains it consults. [[commit]] fills in the version, the base
+    * version and the partition columns. */
+  private final class Snapshot(val spark: SparkSession, root: String,
+      at: Option[Int] = None) {
+    val (fs, rootP) = fsOf(spark, root)
+    private val versions = existingVersions(fs, rootP)
+    val base: Manifest = readManifest(fs, rootP, at.getOrElse {
+      require(versions.nonEmpty, s"no table at $root")
+      versions.last
+    })
+    /** The version this operation commits. */
+    def v: Int = base.version + 1
+
+    lazy val log: Seq[Manifest] =
+      versions.filter(_ < base.version).map(readManifest(fs, rootP, _)) :+ base
+    lazy val renames: Seq[(Int, String, String)] = renameOps(log)
+    lazy val drops: Seq[DropState] = dropChain(fs, rootP, log)
+    lazy val widens: Seq[(Int, String, DataType)] = widenOps(log)
+    lazy val widenedSchema: StructType =
+      widenedSnapshot(spark, rootP, base, renames, widens)
+    /** The schema rewrites and probes pin their per-dir reads to: the
+      * plain footer union when no widen is in effect, else the widened
+      * union (`mergeSchema` throws CANNOT_MERGE_SCHEMAS on the mixed
+      * int/bigint layout a widen creates). */
+    lazy val schema: StructType =
+      if (widens.isEmpty)
+        unionSchema(spark, rootP, base.dataDirs, base.partitionCols.nonEmpty)
+      else widenedSchema
+    lazy val tombs: Seq[(String, Set[String])] = tombScopes(fs, rootP, base)
+
+    def dirTombs(d: String): Seq[String] = tombs.filter(_._2.contains(d)).map(_._1)
+
+    /** Directory `d` as a rewrite sees it: pinned to [[schema]], its
+      * tombstones subtracted, dead dropped-column values nulled. */
+    def resolved(d: String): DataFrame = maskDeadDir(applyTombs(spark, rootP,
+      readDirsAs(spark, rootP, Seq(d), schema), dirTombs(d)), d, drops)
+
+    /** `df`, read from `dirs`, minus the columns dead in all of them. */
+    def pruned(df: DataFrame, dirs: Seq[String],
+        exempt: Set[String] = Set.empty): DataFrame =
+      pruneDeadCols(spark, rootP, df, dirs, drops, exempt)
+
+    def resolvedUnion(dirs: Seq[String]): DataFrame =
+      pruned(dirs.map(resolved).reduce(_.unionByName(_)), dirs)
+
+    /** Tombstones still masking at least one directory of `dirs`
+      * (rewritten dirs have new names and leave their tombstones'
+      * scopes; a fully-escaped tombstone is dropped — vacuum reclaims
+      * its bytes with its retention window). */
+    def liveTombs(dirs: Seq[String]): Seq[String] = {
+      val dirSet = dirs.toSet
+      tombs.filter(_._2.exists(dirSet)).map(_._1)
+    }
+
+    /** The full mapped read: drop masking (per-row via the [[DirCol]]
+      * tag), dead-column pruning, then the rename fold — what
+      * [[readVersion]] and [[compact]] share. The no-drop path is the
+      * untagged fast path (zero plan overhead). Widen-aware reads pin
+      * the WIDE union schema per directory (the narrow eras upcast in
+      * the parquet reader); without widens the historical paths — incl.
+      * the no-merge single-footer fast path — are byte-identical. */
+    def read(mergeSchema: Boolean): DataFrame = {
+      def resolvedAll(tag: Boolean): DataFrame =
+        if (widens.isEmpty) resolvedRead(spark, fs, rootP, base, mergeSchema, tag)
+        else resolvedReadAs(spark, fs, rootP, base, widenedSchema, tag)
+      if (drops.isEmpty) applyRenames(resolvedAll(false), renames)
+      else {
+        val masked = drops.flatMap(_.dead).foldLeft(resolvedAll(true)) {
+          case (a, (p, dirs)) =>
+            val maskDirs = base.dataDirs.filter(dirs)
+            if (maskDirs.isEmpty || !a.columns.contains(p)) a
+            else a.withColumn(p, when(!col(DirCol).isin(maskDirs: _*), col(p)))
+        }
+        applyRenames(pruned(masked, base.dataDirs), renames).drop(DirCol)
+      }
+    }
+
+    /** A new data directory for this operation's commit. */
+    def write(df: DataFrame): String =
+      writeDataDir(df, rootP, v, base.partitionCols)
+
+    def commit(op: String, dirs: Seq[String], deleteDirs: Seq[String],
+        tag: String = "", partitionCols: Seq[String] = base.partitionCols): Manifest =
+      VersionedTable.commit(fs, rootP,
+        Manifest(v, op, base.version, dirs, tag, partitionCols, deleteDirs))
+  }
+
+  /** The dirty side of a [[rewrite]]: its directories and their resolved
+    * union (MOR-subtracted, drop-masked, not yet pruned). */
+  private final case class Dirty(s: Snapshot, dirs: Seq[String], rows: DataFrame) {
+    /** `df` (derived from [[rows]]) minus the columns dead in every
+      * dirty directory. */
+    def pruned(df: DataFrame, exempt: Set[String] = Set.empty): DataFrame =
+      s.pruned(df, dirs, exempt)
+  }
+
+  /** The copy-on-write kernel every row-level rewrite is a view of:
+    * probe each snapshot directory with `isDirty`, carry the clean ones
+    * over by NAME, hand the resolved union of the dirty ones to `body`,
+    * write what it returns (survivors plus incoming rows) as ONE new
+    * directory, and commit with the tombstones still masking a kept
+    * directory. Survivors re-emit under a new name, so the tombstones
+    * folded into them never double-apply. `body` returning None writes
+    * nothing (the snapshot's directories commit as they are); `skip`
+    * holding on the dirty set commits nothing and returns the base.
+    *
+    * Op-scoped cache rule: a rewrite returns its manifest only after
+    * its write consumed every frame it cached, so nothing it persists
+    * may outlive it. The dirty union (`persistDirty`) and the ops' own
+    * cached frames go through [[opScoped]], never through the JVM-global
+    * [[graft.engine.Caches]] registry. */
+  private def rewrite(s: Snapshot, op: String, persistDirty: Boolean = false,
+      skip: Seq[String] => Boolean = _ => false)(isDirty: String => Boolean)(
+      body: Option[Dirty] => Option[DataFrame]): Manifest = {
+    // resolve what every probe reads here, not inside the first probe
+    // thread (the others would block on it, and retry it on failure)
+    (s.schema, s.tombs, s.drops)
+    val (dirty, clean) = partitionDirty(s.base.dataDirs)(isDirty)
+    if (skip(dirty)) s.base
+    else {
+      val union =
+        if (dirty.isEmpty) None
+        else Some(dirty.map(s.resolved).reduce(_.unionByName(_)))
+      opScoped(if (persistDirty) union.toSeq else Nil) {
+        val dirs = body(union.map(Dirty(s, dirty, _)))
+          .fold(s.base.dataDirs)(df => clean :+ s.write(df))
+        s.commit(op, dirs, s.liveTombs(dirs))
+      }
+    }
+  }
+
+  /** Persist `frames` for the duration of `body` and unpersist them in
+    * a finally (see [[rewrite]]'s op-scoped cache rule). A frame the
+    * caller had already cached is left as it was. */
+  private def opScoped[T](frames: Seq[DataFrame])(body: => T): T = {
+    val mine = frames.filter(
+      _.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    mine.foreach(_.persist())
+    try body
+    finally mine.foreach(_.unpersist(false))
+  }
+
+  /** Dirty probes in flight per copy-on-write rewrite. */
+  private val ProbeParallelism = 4
+
+  /** COW dirty-probe over the snapshot's directories, [[ProbeParallelism]]
+    * probes in flight (each an independent pushed-down existence job —
+    * read-only, so concurrency is free; the [[graft.operators.Relational
+    * .compactPartitioned]] bounded-pool pattern). A long-lived table is
+    * many directories and the probes were the one driver-serial loop in
+    * the COW path; results keep directory order either way. */
+  private def partitionDirty(dirs: Seq[String])(
+      isDirty: String => Boolean): (Seq[String], Seq[String]) =
+    if (dirs.size <= 1) dirs.partition(isDirty)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        ProbeParallelism.min(dirs.size))
+      try {
+        val flags = dirs.map(d => d -> pool.submit(
+          new java.util.concurrent.Callable[Boolean] {
+            def call(): Boolean = isDirty(d)
+          }))
+          .map { case (d, f) =>
+            d -> (try f.get() catch {
+              case e: java.util.concurrent.ExecutionException => throw e.getCause
+            })
+          }
+        (flags.filter(_._2).map(_._1), flags.filterNot(_._2).map(_._1))
+      } finally pool.shutdown()
+    }
+
   /** Does the (just-written) directory hold at least one parquet file?
     * One recursive listing, no Spark job — the post-write emptiness
     * detector for partitioned writes. */
@@ -262,6 +432,19 @@ object VersionedTable {
     false
   }
 
+  /** Exclusive data-dir allocation: claim the first free `d-%08d` at or
+    * above `v` by atomically creating its `.claim` marker
+    * (`create(overwrite = false)` — exclusive on HDFS), then write with
+    * APPEND semantics into the claimed-and-fresh directory. Nothing is
+    * ever overwritten: a concurrent writer racing for the same number
+    * loses the claim and takes the next one, so the losing commit can
+    * never have clobbered the winner's bytes (the hazard an
+    * overwrite-by-version-number convention would carry). Crash orphans
+    * — claimed or written but never referenced by a manifest — are
+    * exactly what [[vacuum]] reclaims; dir numbers may therefore run
+    * ahead of versions, which nothing assumes away (manifests reference
+    * dirs by NAME). The dot-prefixed marker is invisible to parquet
+    * readers and to `d-\\d{8}` sweeps. */
   private def writeDataDir(df: DataFrame, root: Path, v: Int,
       partitionCols: Seq[String] = Nil, enforce: Boolean = true): String = {
     val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
@@ -364,13 +547,14 @@ object VersionedTable {
     * snapshot) deliberately do NOT retry: they throw, and the caller
     * re-runs the whole operation against the new state. */
   def append(spark: SparkSession, root: String, df: DataFrame,
-      tag: String = "", maxRetries: Int = 5): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val dir = writeDataDir(applyGenerated(fs, rootP, df), rootP,
-      base.version + 1, base.partitionCols)
-    commitAppendLoop(fs, rootP, dir, tag, base.version, maxRetries)
+      tag: String = ""): Manifest = {
+    val s = new Snapshot(spark, root)
+    val dir = s.write(applyGenerated(s.fs, s.rootP, df))
+    commitAppendLoop(s.fs, s.rootP, dir, tag, s.base.version, AppendRetries)
   }
+
+  /** Lost manifest races an append re-commits through before giving up. */
+  private val AppendRetries = 5
 
   /** IDENTITY-column append (Delta `GENERATED ALWAYS AS IDENTITY`
     * semantics at this format layer): assign `idCol` values continuing
@@ -398,12 +582,12 @@ object VersionedTable {
   def appendWithIdentity(spark: SparkSession, root: String, df: DataFrame,
       idCol: String, orderCol: String, bands: Int = 32,
       tag: String = ""): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
+    val s = new Snapshot(spark, root)
+    val base = s.base
     // start = current max id: sidecar fast path, else one scan
     val fromStats: Option[Long] = {
       val per = base.dataDirs.map { d =>
-        readStats(fs, rootP, d) match {
+        readStats(s.fs, s.rootP, d) match {
           case Some(ds) if ds.rows == 0L => Some(None)
           case Some(ds) => ds.cols.get(idCol) match {
             case Some(cs) if !cs.hasValues => Some(None)
@@ -420,19 +604,17 @@ object VersionedTable {
       // RAW union, tombstones ignored: a MOR-deleted id stays burned
       // (reuse would resurrect it for readers of older versions) —
       // matching the sidecar path, whose stats never see tombstones
-      val m = (if (widenOps(fs, rootP, base.version).isEmpty)
-          readDirs(spark, rootP, base.dataDirs, mergeSchema = true,
+      val m = (if (s.widens.isEmpty)
+          readDirs(spark, s.rootP, base.dataDirs, mergeSchema = true,
             base.partitionCols.nonEmpty)
         // RAW union again, just pinned to the wide schema — mergeSchema
         // throws on the mixed-width layout a widen creates
-        else readDirsAs(spark, rootP, base.dataDirs,
-          widenedSnapshot(spark, fs, rootP, base, base.version)))
+        else readDirsAs(spark, s.rootP, base.dataDirs, s.widenedSchema))
         .agg(max(col(idCol).cast("long"))).head
       if (m.isNullAt(0)) 0L else m.getLong(0)
     }
-    val dir = writeDataDir(assignIds(df, idCol, orderCol, start, bands),
-      rootP, base.version + 1, base.partitionCols)
-    commitAppendLoop(fs, rootP, dir, tag, base.version, 5)
+    val dir = s.write(assignIds(df, idCol, orderCol, start, bands))
+    commitAppendLoop(s.fs, s.rootP, dir, tag, base.version, AppendRetries)
   }
 
   /** CREATE with a generated identity column — the version-0 sibling
@@ -508,38 +690,33 @@ object VersionedTable {
       keyCol: String, nBuckets: Int): Manifest = {
     require(nBuckets >= 2 && nBuckets <= 1024,
       s"nBuckets must be in 2..1024: $nBuckets")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    require(!snap.fieldNames.contains("_bucket"),
+    val s = new Snapshot(spark, root)
+    require(!s.schema.fieldNames.contains("_bucket"),
       "optimizeBucketed: the table already has a _bucket column")
-    val tombs = tombScopes(fs, rootP, base)
-    def dirTombs(d: String): Seq[String] =
-      tombs.filter(_._2.contains(d)).map(_._1)
-    val drops = dropChain(fs, rootP, base.version)
     // barrierCut, not persist (r18): each of the ≤ nBuckets bucket writes
     // below re-PLANS the frame it filters — a persist caches data but
     // Catalyst still re-optimizes the full per-dir mask/prune union per
     // write job. The cut flattens it to a leaf once.
     val resolvedAll = graft.engine.Barriers.cut(
-      pruneDeadCols(spark, rootP,
-        base.dataDirs.map(d => maskDeadDir(applyTombs(spark, rootP,
-          readDirsAs(spark, rootP, Seq(d), snap), dirTombs(d)), d, drops))
-          .reduce(_.unionByName(_)),
-        base.dataDirs, drops)
+      s.resolvedUnion(s.base.dataDirs)
         .withColumn("_bucket", pmod(
           graft.operators.Sampling.fibHash(col(keyCol).cast("long")),
           lit(nBuckets.toLong))))
-    val present = resolvedAll.select(col("_bucket")).distinct()
-      .collect().map(_.getLong(0)).sorted // bounded: ≤ nBuckets values
+    commitBuckets(s, "optimize-bucket", resolvedAll, "_bucket",
+      resolvedAll.columns.toSeq)
+  }
+
+  /** Write each value of the long column `bucket` of `rows` (a cut leaf
+    * with few bucket values by construction) as its own directory
+    * holding the `data` columns, and commit them as the new snapshot. */
+  private def commitBuckets(s: Snapshot, op: String, rows: DataFrame,
+      bucket: String, data: Seq[String]): Manifest = {
+    val present = rows.select(col(bucket)).distinct()
+      .collect().map(_.getLong(0)).sorted
     val dirs = present.map { b =>
-      writeDataDir(resolvedAll.filter(col("_bucket") === b),
-        rootP, v, base.partitionCols)
+      s.write(rows.filter(col(bucket) === b).select(data.map(col): _*))
     }.toSeq
-    commit(fs, rootP, Manifest(v, "optimize-bucket", base.version, dirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = liveTombs(tombs, dirs)))
+    s.commit(op, dirs, s.liveTombs(dirs))
   }
 
   /** Bucket-pruned point lookup over an [[optimizeBucketed]] layout:
@@ -593,22 +770,20 @@ object VersionedTable {
       rowRules: Seq[(String, org.apache.spark.sql.Column)],
       uniqueKeys: Seq[(String, Seq[String])] = Nil,
       tag: String = ""): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    val dir = writeDataDir(df, rootP, v, base.partitionCols)
+    val s = new Snapshot(spark, root)
+    val dir = s.write(df)
     val report = graft.operators.Relational.dqReport(
-        readDirs(spark, rootP, Seq(dir)), rowRules, uniqueKeys)
+        readDirs(spark, s.rootP, Seq(dir)), rowRules, uniqueKeys)
       .collect().map(r => (r.getString(0), r.getLong(1)))
     val bad = report.filter(_._2 != 0L)
     if (bad.nonEmpty) {
-      val swept = fs.delete(new Path(rootP, dir), true)
+      val swept = s.fs.delete(new Path(s.rootP, dir), true)
       throw new IllegalStateException("appendAudited: audit failed, " +
-        s"table untouched at version ${base.version}: " +
+        s"table untouched at version ${s.base.version}: " +
         bad.map { case (n, c) => s"$n=$c" }.mkString(", ") +
         (if (swept) "" else s"; staging NOT swept at $dir"))
     }
-    commitAppendLoop(fs, rootP, dir, tag, base.version, maxRetries = 5)
+    commitAppendLoop(s.fs, s.rootP, dir, tag, s.base.version, AppendRetries)
   }
 
   /** Idempotent tagged append — the exactly-once sink primitive: if any
@@ -640,11 +815,8 @@ object VersionedTable {
   /** Replace the snapshot wholesale (the `SaveMode.Overwrite` analogue —
     * but old readers' snapshots stay valid until vacuum). */
   def overwrite(spark: SparkSession, root: String, df: DataFrame): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    commit(fs, rootP, Manifest(base.version + 1, "overwrite", base.version,
-      Seq(writeDataDir(df, rootP, base.version + 1, base.partitionCols)),
-      partitionCols = base.partitionCols))
+    val s = new Snapshot(spark, root)
+    s.commit("overwrite", Seq(s.write(df)), Nil)
   }
 
   /** PARTITION-SPEC EVOLUTION (the Iceberg capability, with Iceberg's
@@ -672,18 +844,17 @@ object VersionedTable {
     require(newCols.nonEmpty,
       "cannot evolve to unpartitioned: compact(...) first (the snapshot " +
         "rewrite is what retires old hive directories)")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
+    val s = new Snapshot(spark, root)
+    val base = s.base
     if (base.partitionCols == newCols) base
     else {
-      val snapCols = resolvedRead(spark, fs, rootP, base, mergeSchema = true)
+      val snapCols = resolvedRead(spark, s.fs, s.rootP, base, mergeSchema = true)
         .schema.fieldNames.toSet
       val missing = newCols.filterNot(snapCols)
       require(missing.isEmpty,
         s"partition column(s) not in table schema: ${missing.mkString(", ")}")
-      commit(fs, rootP, Manifest(base.version + 1, "partition-evolve",
-        base.version, base.dataDirs, partitionCols = newCols,
-        deleteDirs = base.deleteDirs))
+      s.commit("partition-evolve", base.dataDirs, base.deleteDirs,
+        partitionCols = newCols)
     }
   }
 
@@ -792,17 +963,8 @@ object VersionedTable {
     if (m.deleteDirs.isEmpty)
       readDirs(spark, root, m.dataDirs, mergeSchema, m.partitionCols.nonEmpty,
         tagDirs)
-    else {
-      val snap = unionSchema(spark, root, m.dataDirs, m.partitionCols.nonEmpty)
-      val tombs = tombScopes(fs, root, m)
-      m.dataDirs.groupBy(d => tombs.filter(_._2.contains(d)).map(_._1))
-        .toSeq.sortBy(_._2.head) // deterministic plan shape
-        .map { case (ts, dirs) =>
-          applyTombs(spark, root,
-            readDirsAs(spark, root, dirs, snap, tagDirs), ts)
-        }
-        .reduce(_.unionByName(_))
-    }
+    else resolvedReadAs(spark, fs, root, m,
+      unionSchema(spark, root, m.dataDirs, m.partitionCols.nonEmpty), tagDirs)
 
   /** MERGE-ON-READ delete — the Iceberg v2 equality-delete / Delta
     * deletion-vector capability class, next to [[deleteWhere]]'s
@@ -832,49 +994,16 @@ object VersionedTable {
     * VersionedTableSpec. */
   def deleteKeysMor(spark: SparkSession, root: String,
       keys: DataFrame): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    val snapCols = cowSnapshot(spark, fs, rootP, base).fieldNames.toSet
-    val bad = keys.columns.filterNot(snapCols)
+    val s = new Snapshot(spark, root)
+    val bad = keys.columns.filterNot(s.schema.fieldNames.toSet)
     require(bad.isEmpty,
       s"deleteKeysMor: key column(s) not in table: ${bad.mkString(", ")}")
     // tombstones are key files: written unpartitioned whatever the
     // table's layout, deduped so the mask is minimal (and exempt from
     // CHECK constraints — key files are not table rows)
-    val dir = writeDataDir(keys.distinct(), rootP, v, enforce = false)
-    writeApplies(fs, rootP, dir, base.dataDirs)
-    commit(fs, rootP, Manifest(v, "mor-delete", base.version, base.dataDirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = base.deleteDirs :+ dir))
-  }
-
-  /** COW dirty-probe over the snapshot's directories, `parallelism`
-    * probes in flight (each an independent pushed-down existence job —
-    * read-only, so concurrency is free; the [[graft.operators.Relational
-    * .compactPartitioned]] bounded-pool pattern). A long-lived table is
-    * many directories and the probes were the one driver-serial loop in
-    * the COW path; results keep directory order either way. */
-  private def partitionDirty(dirs: Seq[String], parallelism: Int)(
-      isDirty: String => Boolean): (Seq[String], Seq[String]) = {
-    require(parallelism >= 1, s"probe parallelism $parallelism")
-    if (parallelism == 1 || dirs.size <= 1) dirs.partition(isDirty)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        parallelism.min(dirs.size))
-      try {
-        val flags = dirs.map(d => d -> pool.submit(
-          new java.util.concurrent.Callable[Boolean] {
-            def call(): Boolean = isDirty(d)
-          }))
-          .map { case (d, f) =>
-            d -> (try f.get() catch {
-              case e: java.util.concurrent.ExecutionException => throw e.getCause
-            })
-          }
-        (flags.filter(_._2).map(_._1), flags.filterNot(_._2).map(_._1))
-      } finally pool.shutdown()
-    }
+    val dir = writeDataDir(keys.distinct(), s.rootP, s.v, enforce = false)
+    writeApplies(s.fs, s.rootP, dir, s.base.dataDirs)
+    s.commit("mor-delete", s.base.dataDirs, s.base.deleteDirs :+ dir)
   }
 
   /** Snapshot read at an explicit version (time travel). `mergeSchema`
@@ -884,11 +1013,8 @@ object VersionedTable {
     * append itself is just [[append]]; evolution is a READ-side choice,
     * exactly parquet's. Off by default: the single-footer fast path. */
   def readVersion(spark: SparkSession, root: String, v: Int,
-      mergeSchema: Boolean = false): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val m = readManifest(fs, rootP, v)
-    mappedRead(spark, fs, rootP, m, v, mergeSchema)
-  }
+      mergeSchema: Boolean = false): DataFrame =
+    new Snapshot(spark, root, Some(v)).read(mergeSchema)
 
   // ---- column-mapping renames -------------------------------------------
 
@@ -928,16 +1054,14 @@ object VersionedTable {
     require(from.matches("[A-Za-z0-9_]+") && to.matches("[A-Za-z0-9_]+"),
       s"column names must be [A-Za-z0-9_]+: $from -> $to")
     require(from != to, s"rename to self: $from")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    require(!base.partitionCols.contains(from),
+    val s = new Snapshot(spark, root)
+    require(!s.base.partitionCols.contains(from),
       s"cannot rename partition column: $from")
-    val cols = readLatest(spark, root, mergeSchema = true).columns.toSet
+    val cols = s.read(mergeSchema = true).columns.toSet
     require(cols.contains(from), s"no such column: $from")
     require(!cols.contains(to), s"column already exists: $to")
-    commit(fs, rootP, Manifest(base.version + 1, "rename-column",
-      base.version, base.dataDirs, s"rename:$from:$to",
-      base.partitionCols, base.deleteDirs))
+    s.commit("rename-column", s.base.dataDirs, s.base.deleteDirs,
+      s"rename:$from:$to")
   }
 
   /** Schema-ENFORCED append — the Delta schema-enforcement capability
@@ -963,17 +1087,9 @@ object VersionedTable {
     append(spark, root, df, tag)
   }
 
-  /** Renames committed at or before `upTo`, oldest first. */
-  private def renameChain(fs: FileSystem, root: Path,
-      upTo: Int): Seq[(String, String)] =
-    renameOps(fs, root, upTo).map { case (_, f, t) => (f, t) }
-
-  /** Renames with their commit versions, oldest first. */
-  private def renameOps(fs: FileSystem, root: Path,
-      upTo: Int): Seq[(Int, String, String)] =
-    existingVersions(fs, root).filter(_ <= upTo).sorted
-      .map(readManifest(fs, root, _))
-      .filter(_.op == "rename-column")
+  /** The renames in `log` with their commit versions, oldest first. */
+  private def renameOps(log: Seq[Manifest]): Seq[(Int, String, String)] =
+    log.filter(_.op == "rename-column")
       .map { m =>
         val Array(_, f, t) = m.tag.split(":", 3)
         (m.version, f, t)
@@ -984,8 +1100,8 @@ object VersionedTable {
     * old-era frames rename in place; frames missing the source column
     * pass through (e.g. a caller's projection already dropped it). */
   private def applyRenames(df: DataFrame,
-      chain: Seq[(String, String)]): DataFrame =
-    chain.foldLeft(df) { case (d, (from, to)) =>
+      chain: Seq[(Int, String, String)]): DataFrame =
+    chain.foldLeft(df) { case (d, (_, from, to)) =>
       val cs = d.columns.toSet
       if (cs.contains(from) && cs.contains(to))
         d.withColumn(to, coalesce(col(to), col(from))).drop(from)
@@ -1010,11 +1126,6 @@ object VersionedTable {
   private final case class DropState(logical: String, version: Int,
       dead: Map[String, Set[String]])
 
-  /** Drop-column commits at or before `upTo`, oldest first, each with
-    * its physical sources resolved through the rename chain BEFORE it
-    * (per-source era scoping: a physical name renamed away at `vr` is
-    * dead only in directories present at `vr` — a later append reusing
-    * the bare name is a different column and stays live). */
   /** COW-rewrite ops whose fresh directories only ever CARRY bytes from
     * the snapshot they rewrote — never user-supplied rows. Everything
     * else (create/append/overwrite/replace-where/cdc/fast-forward/…)
@@ -1039,10 +1150,13 @@ object VersionedTable {
     }
   }
 
+  /** The drop-column commits of `manifests` (a log, oldest first), each
+    * with its physical sources resolved through the rename chain BEFORE
+    * it (per-source era scoping: a physical name renamed away at `vr` is
+    * dead only in directories present at `vr` — a later append reusing
+    * the bare name is a different column and stays live). */
   private def dropChain(fs: FileSystem, root: Path,
-      upTo: Int): Seq[DropState] = {
-    val manifests = existingVersions(fs, root).filter(_ <= upTo).sorted
-      .map(readManifest(fs, root, _))
+      manifests: Seq[Manifest]): Seq[DropState] =
     manifests.filter(_.op == "drop-column").map { m =>
       val c = m.tag.split(":", 2)(1)
       var dead = Map(c -> m.dataDirs.toSet)
@@ -1085,7 +1199,6 @@ object VersionedTable {
         }
       DropState(c, m.version, dead)
     }
-  }
 
   private def isDead(drops: Seq[DropState], p: String, d: String): Boolean =
     drops.exists(_.dead.get(p).exists(_.contains(d)))
@@ -1132,39 +1245,6 @@ object VersionedTable {
       df.drop(prunable: _*)
     }
 
-  /** The full mapped read: drop masking (per-row via the [[DirCol]]
-    * tag), dead-column pruning, then the rename fold — what
-    * [[readVersion]] and [[compact]] share. The no-drop path is the
-    * untagged fast path (zero plan overhead). */
-  private def mappedRead(spark: SparkSession, fs: FileSystem, rootP: Path,
-      m: Manifest, v: Int, mergeSchema: Boolean): DataFrame = {
-    val drops = dropChain(fs, rootP, v)
-    val renames = renameChain(fs, rootP, v)
-    val widens = widenOps(fs, rootP, v)
-    // widen-aware reads pin the WIDE union schema per directory (the
-    // narrow eras upcast in the parquet reader); without widens the
-    // historical paths — incl. the no-merge single-footer fast path —
-    // are byte-identical
-    def resolved(tag: Boolean): DataFrame =
-      if (widens.isEmpty) resolvedRead(spark, fs, rootP, m, mergeSchema, tag)
-      else resolvedReadAs(spark, fs, rootP, m,
-        widenedSnapshot(spark, fs, rootP, m, v), tag)
-    if (drops.isEmpty)
-      applyRenames(resolved(false), renames)
-    else {
-      val raw = resolved(true)
-      val masked = drops.flatMap(_.dead).foldLeft(raw) {
-        case (a, (p, dirs)) =>
-          val maskDirs = m.dataDirs.filter(dirs)
-          if (maskDirs.isEmpty || !a.columns.contains(p)) a
-          else a.withColumn(p,
-            when(!col(DirCol).isin(maskDirs: _*), col(p)))
-      }
-      val pruned = pruneDeadCols(spark, rootP, masked, m.dataDirs, drops)
-      applyRenames(pruned, renames).drop(DirCol)
-    }
-  }
-
   /** Drop a column WITHOUT rewriting any data — the other half of
     * mapping-based schema evolution next to [[renameColumn]] (Delta
     * `ALTER TABLE DROP COLUMN` under column mapping): a metadata-only
@@ -1198,29 +1278,27 @@ object VersionedTable {
       colName: String): Manifest = {
     require(colName.matches("[A-Za-z0-9_]+"),
       s"column name must be [A-Za-z0-9_]+: $colName")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    require(!base.partitionCols.contains(colName),
+    val s = new Snapshot(spark, root)
+    require(!s.base.partitionCols.contains(colName),
       s"cannot drop partition column: $colName")
-    val cols = readLatest(spark, root, mergeSchema = true).columns.toSet
+    val cols = s.read(mergeSchema = true).columns.toSet
     require(cols.contains(colName), s"no such column: $colName")
     require(cols.size > 1, s"cannot drop the last column: $colName")
     val pat = java.util.regex.Pattern.compile("\\b" + colName + "\\b")
-    val referenced = activeConstraints(fs, rootP)
+    val referenced = activeConstraints(s.fs, s.rootP)
       .filter { case (_, e) => pat.matcher(e).find() }
     require(referenced.isEmpty,
       s"cannot drop $colName: referenced by CHECK constraint(s) " +
         referenced.map(_._1).mkString(", "))
     // an INPUT of a generated column can't go (appends would fail to
     // compute it); the generated column ITSELF retires its declaration
-    val genRef = activeGenerated(fs, rootP)
+    val genRef = activeGenerated(s.fs, s.rootP)
       .filter { case (n, e) => n != colName && pat.matcher(e).find() }
     require(genRef.isEmpty,
       s"cannot drop $colName: generated column(s) " +
         s"${genRef.map(_._1).mkString(", ")} compute from it")
-    val committed = commit(fs, rootP, Manifest(base.version + 1,
-      "drop-column", base.version, base.dataDirs, s"drop:$colName",
-      base.partitionCols, base.deleteDirs))
+    val committed = s.commit("drop-column", s.base.dataDirs,
+      s.base.deleteDirs, s"drop:$colName")
     // AFTER the commit succeeds: retiring the declaration first left a
     // failed (racing-writer) commit with the column still live but its
     // generated-column contract gone, so later appends silently stopped
@@ -1230,9 +1308,6 @@ object VersionedTable {
   }
 
   // ---- column type widening ---------------------------------------------
-
-  import org.apache.spark.sql.types.{ByteType, DataType, DoubleType,
-    FloatType, IntegerType, LongType, ShortType, StructField, StructType}
 
   private val IntWidth: Map[DataType, Int] =
     Map(ByteType -> 0, ShortType -> 1, IntegerType -> 2, LongType -> 3)
@@ -1250,12 +1325,9 @@ object VersionedTable {
         else None
     }
 
-  /** widen-column commits at or before `upTo`, oldest first. */
-  private def widenOps(fs: FileSystem, root: Path,
-      upTo: Int): Seq[(Int, String, DataType)] =
-    existingVersions(fs, root).filter(_ <= upTo).sorted
-      .map(readManifest(fs, root, _))
-      .filter(_.op == "widen-column")
+  /** The widen-column commits in `log`, oldest first. */
+  private def widenOps(log: Seq[Manifest]): Seq[(Int, String, DataType)] =
+    log.filter(_.op == "widen-column")
       .map { m =>
         val Array(_, c, t) = m.tag.split(":", 3)
         (m.version, c, DataType.fromDDL(t))
@@ -1270,8 +1342,9 @@ object VersionedTable {
     * pre-rename directories, forward chain after it so post-widen
     * renames keep reading wide). Non-numeric conflicts still fail
     * loudly (widening never weakens schema-conflict detection). */
-  private def widenedSnapshot(spark: SparkSession, fs: FileSystem,
-      root: Path, m: Manifest, upTo: Int): StructType = {
+  private def widenedSnapshot(spark: SparkSession, root: Path, m: Manifest,
+      rops: Seq[(Int, String, String)],
+      widens: Seq[(Int, String, DataType)]): StructType = {
     val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
     m.dataDirs.foreach { d =>
       spark.read.parquet(dataPath(spark, root, d).toString).schema.foreach { f =>
@@ -1289,8 +1362,7 @@ object VersionedTable {
         }
       }
     }
-    val rops = renameOps(fs, root, upTo)
-    widenOps(fs, root, upTo).foreach { case (vw, c, target) =>
+    widens.foreach { case (vw, c, target) =>
       var names = Set(c)
       rops.filter(_._1 < vw).sortBy(-_._1).foreach { case (_, f, to) =>
         if (names(to)) names += f }
@@ -1319,7 +1391,7 @@ object VersionedTable {
     else {
       val tombs = tombScopes(fs, root, m)
       m.dataDirs.groupBy(d => tombs.filter(_._2.contains(d)).map(_._1))
-        .toSeq.sortBy(_._2.head)
+        .toSeq.sortBy(_._2.head) // deterministic plan shape
         .map { case (ts, dirs) =>
           applyTombs(spark, root,
             readDirsAs(spark, root, dirs, schema, tagDirs), ts)
@@ -1348,17 +1420,6 @@ object VersionedTable {
       dirs.map(d =>
           readDirs(spark, root, Seq(d), mergeSchema = false, partitioned).schema)
         .reduce(org.apache.spark.sql.GraftSqlBridge.mergeSchemas)
-
-  /** The snapshot schema COW rewrites and probes pin their per-dir reads
-    * to: the plain footer-union when no widen is in effect (the
-    * historical fast path, byte-identical behavior), else the widened
-    * union — `mergeSchema = true` itself throws CANNOT_MERGE_SCHEMAS on
-    * the mixed int/bigint layout a widen creates. */
-  private def cowSnapshot(spark: SparkSession, fs: FileSystem, root: Path,
-      base: Manifest): StructType =
-    if (widenOps(fs, root, base.version).isEmpty)
-      unionSchema(spark, root, base.dataDirs, base.partitionCols.nonEmpty)
-    else widenedSnapshot(spark, fs, root, base, base.version)
 
   /** Widen a column's type WITHOUT rewriting any data — Delta type
     * widening / Iceberg type promotion, the third mapping-based
@@ -1396,19 +1457,17 @@ object VersionedTable {
     val target = DataType.fromDDL(toType)
     require(IntWidth.contains(target) || target == DoubleType,
       s"unsupported widen target: $toType")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    require(!base.partitionCols.contains(colName),
+    val s = new Snapshot(spark, root)
+    require(!s.base.partitionCols.contains(colName),
       s"cannot widen partition column: $colName")
-    val schema = readLatest(spark, root, mergeSchema = true).schema
+    val schema = s.read(mergeSchema = true).schema
     require(schema.fieldNames.contains(colName), s"no such column: $colName")
     val cur = schema(colName).dataType
     require(cur != target && widerOf(cur, target).contains(target),
       s"cannot widen $colName: ${cur.simpleString} -> " +
         s"${target.simpleString} is not a lossless promotion")
-    commit(fs, rootP, Manifest(base.version + 1, "widen-column",
-      base.version, base.dataDirs, s"widen:$colName:${target.simpleString}",
-      base.partitionCols, base.deleteDirs))
+    s.commit("widen-column", s.base.dataDirs, s.base.deleteDirs,
+      s"widen:$colName:${target.simpleString}")
   }
 
   /** The snapshot current AT a wall-clock instant (Delta `TIMESTAMP AS
@@ -1474,7 +1533,7 @@ object VersionedTable {
 
   def readLatest(spark: SparkSession, root: String,
       mergeSchema: Boolean = false): DataFrame =
-    readVersion(spark, root, requireExists(spark, root), mergeSchema)
+    new Snapshot(spark, root).read(mergeSchema)
 
   /** Copy-on-write delete: each snapshot directory is probed with the
     * pushed-down predicate; clean directories carry over by NAME (zero
@@ -1482,49 +1541,18 @@ object VersionedTable {
     * rows into the new version's directory. A delete that empties the
     * table still commits (an empty data dir is a valid snapshot). */
   def deleteWhere(spark: SparkSession, root: String,
-      cond: org.apache.spark.sql.Column,
-      probeParallelism: Int = 4): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
+      cond: org.apache.spark.sql.Column): Manifest = {
+    val s = new Snapshot(spark, root)
     // probes and rewrites run under the SNAPSHOT's union schema (merged
     // once over all dirs, then pinned per-dir) so an evolved table
     // behaves: a directory predating a predicate's column reads it as
     // null (cond null → dir clean), and a dirty-dir rewrite keeps the
-    // union schema instead of silently dropping late columns
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    // probes and rewrites see the MOR-RESOLVED per-dir contents: a dir
-    // whose only matching rows are tombstoned is clean, and a rewrite
-    // folds its tombstones in (survivors re-emit under a NEW name, so
-    // carried tombstones never double-apply)
-    val tombs = tombScopes(fs, rootP, base)
-    val drops = dropChain(fs, rootP, base.version)
-    def resolved(d: String): DataFrame = maskDeadDir(applyTombs(spark, rootP,
-      readDirsAs(spark, rootP, Seq(d), snap),
-      tombs.filter(_._2.contains(d)).map(_._1)), d, drops)
-    val (dirty, clean) = partitionDirty(base.dataDirs, probeParallelism) { d =>
-      !resolved(d).filter(cond).isEmpty
+    // union schema instead of silently dropping late columns. They see
+    // the MOR-RESOLVED per-dir contents: a dir whose only matching rows
+    // are tombstoned is clean.
+    rewrite(s, "delete")(d => !s.resolved(d).filter(cond).isEmpty) {
+      _.map(t => t.pruned(t.rows.filter(!coalesce(cond, lit(false)))))
     }
-    val dirs =
-      if (dirty.isEmpty) base.dataDirs
-      else clean :+ writeDataDir(
-        pruneDeadCols(spark, rootP,
-          dirty.map(resolved).reduce(_.unionByName(_))
-            .filter(!coalesce(cond, lit(false))), dirty, drops),
-        rootP, v, base.partitionCols)
-    commit(fs, rootP, Manifest(v, "delete", base.version, dirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = liveTombs(tombs, dirs)))
-  }
-
-  /** Tombstones still masking at least one directory of the NEW dir
-    * list (rewritten dirs have new names and leave their tombstones'
-    * scopes; a fully-escaped tombstone is dropped — vacuum reclaims
-    * its bytes with its retention window). */
-  private def liveTombs(tombs: Seq[(String, Set[String])],
-      newDirs: Seq[String]): Seq[String] = {
-    val dirSet = newDirs.toSet
-    tombs.filter(_._2.exists(dirSet)).map(_._1)
   }
 
   /** Predicate-scoped atomic overwrite — Delta's `replaceWhere` (the
@@ -1547,32 +1575,14 @@ object VersionedTable {
     * pure insert, clean-dir carry and re-run idempotence pinned in
     * VersionedTableSpec. */
   def replaceWhere(spark: SparkSession, root: String, df: DataFrame,
-      cond: org.apache.spark.sql.Column,
-      probeParallelism: Int = 4): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
+      cond: org.apache.spark.sql.Column): Manifest = {
+    val s = new Snapshot(spark, root)
     require(df.filter(!coalesce(cond, lit(false))).isEmpty,
       "replaceWhere: every incoming row must satisfy the predicate")
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    val tombs = tombScopes(fs, rootP, base)
-    val drops = dropChain(fs, rootP, base.version)
-    def resolved(d: String): DataFrame = maskDeadDir(applyTombs(spark, rootP,
-      readDirsAs(spark, rootP, Seq(d), snap),
-      tombs.filter(_._2.contains(d)).map(_._1)), d, drops)
-    val (dirty, clean) = partitionDirty(base.dataDirs, probeParallelism) { d =>
-      !resolved(d).filter(cond).isEmpty
+    rewrite(s, "replace_where")(d => !s.resolved(d).filter(cond).isEmpty) {
+      dirty => Some(dirty.fold(df)(t =>
+        t.pruned(t.rows.filter(!coalesce(cond, lit(false)))).unionByName(df)))
     }
-    val survivors =
-      if (dirty.isEmpty) None
-      else Some(pruneDeadCols(spark, rootP,
-        dirty.map(resolved).reduce(_.unionByName(_))
-          .filter(!coalesce(cond, lit(false))), dirty, drops))
-    val incoming = survivors.fold(df)(_.unionByName(df))
-    val dirs = clean :+ writeDataDir(incoming, rootP, v, base.partitionCols)
-    commit(fs, rootP, Manifest(v, "replace_where", base.version, dirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = liveTombs(tombs, dirs)))
   }
 
   /** Copy-on-write MERGE upsert on `keyCols`: directories holding a
@@ -1581,39 +1591,22 @@ object VersionedTable {
     * wins within `updates` is the caller's contract (pre-dedupe if the
     * batch can carry key collisions). */
   def upsert(spark: SparkSession, root: String, updates: DataFrame,
-      keyCols: Seq[String], probeParallelism: Int = 4): Manifest = {
+      keyCols: Seq[String]): Manifest = {
     require(keyCols.nonEmpty, "upsert requires key columns")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    // the key set is probed once per directory then drives the anti-join
-    // — persist via the registry so it computes once (released by the
-    // published cache contract)
-    val keys = graft.engine.Caches.persisted(
-      updates.select(keyCols.map(col): _*).distinct())
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    // MOR-resolved per-dir view (see deleteWhere): tombstoned rows are
-    // neither probed dirty nor resurrected by a rewrite
-    val tombs = tombScopes(fs, rootP, base)
-    val drops = dropChain(fs, rootP, base.version)
-    def resolved(d: String): DataFrame = maskDeadDir(applyTombs(spark, rootP,
-      readDirsAs(spark, rootP, Seq(d), snap),
-      tombs.filter(_._2.contains(d)).map(_._1)), d, drops)
-    val (dirty, clean) = partitionDirty(base.dataDirs, probeParallelism) { d =>
-      !resolved(d).join(keys, keyCols, "left_semi").isEmpty
+    val s = new Snapshot(spark, root)
+    // the key set is probed once per directory then drives the anti-join:
+    // cached for the op so it computes once
+    val keys = updates.select(keyCols.map(col): _*).distinct()
+    opScoped(Seq(keys)) {
+      rewrite(s, "upsert")(d =>
+        !s.resolved(d).join(keys, keyCols, "left_semi").isEmpty) {
+        // allowMissingColumns: survivors and updates may sit on either side
+        // of a schema evolution; the union schema fills the gap with nulls
+        dirty => Some(dirty.fold(updates)(t =>
+          t.pruned(t.rows.join(keys, keyCols, "left_anti"))
+            .unionByName(updates, allowMissingColumns = true)))
+      }
     }
-    val survivors = if (dirty.isEmpty) None
-      else Some(pruneDeadCols(spark, rootP,
-        dirty.map(resolved).reduce(_.unionByName(_))
-          .join(keys, keyCols, "left_anti"), dirty, drops))
-    // allowMissingColumns: survivors and updates may sit on either side
-    // of a schema evolution; the union schema fills the gap with nulls
-    val merged = survivors.fold(updates)(
-      _.unionByName(updates, allowMissingColumns = true))
-    val dirs = clean :+ writeDataDir(merged, rootP, v, base.partitionCols)
-    commit(fs, rootP, Manifest(v, "upsert", base.version, dirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = liveTombs(tombs, dirs)))
   }
 
   /** MERGE — the full Delta `MERGE INTO` clause surface over the same
@@ -1653,83 +1646,68 @@ object VersionedTable {
       keyCols: Seq[String],
       updateWhen: Option[Column] = Some(lit(true)),
       deleteWhen: Option[Column] = None,
-      insertUnmatched: Boolean = true,
-      probeParallelism: Int = 4): Manifest = {
+      insertUnmatched: Boolean = true): Manifest = {
     require(keyCols.nonEmpty, "merge requires key columns")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    val src = graft.engine.Caches.persisted(source)
-    require(src.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).isEmpty,
-      "merge: multiple source rows share a key (the Delta multiple-matches error)")
-    val keys = src.select(keyCols.map(col): _*).distinct()
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    val tombs = tombScopes(fs, rootP, base)
-    val drops = dropChain(fs, rootP, base.version)
-    def resolved(d: String): DataFrame = maskDeadDir(applyTombs(spark, rootP,
-      readDirsAs(spark, rootP, Seq(d), snap),
-      tombs.filter(_._2.contains(d)).map(_._1)), d, drops)
-    val (dirty, clean) = partitionDirty(base.dataDirs, probeParallelism) { d =>
-      !resolved(d).join(keys, keyCols, "left_semi").isEmpty
+    val s = new Snapshot(spark, root)
+    opScoped(Seq(source)) {
+      require(source.groupBy(keyCols.map(col): _*)
+          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1).isEmpty,
+        "merge: multiple source rows share a key (the Delta multiple-matches error)")
+      val keys = source.select(keyCols.map(col): _*).distinct()
+      // the dirty union feeds the rewrite AND the unmatched-insert
+      // anti-join: persisted so it scans once
+      rewrite(s, "merge", persistDirty = true)(d =>
+        !s.resolved(d).join(keys, keyCols, "left_semi").isEmpty) { dirty =>
+        val snapCols = s.schema.fieldNames
+        val srcExtra = source.columns.filterNot(keyCols.contains).toSeq
+        srcExtra.foreach(c => require(!snapCols.contains(s"s_$c"),
+          s"merge: target column s_$c collides with the s_ source prefix"))
+        val srcRenamed = source.select(
+          (keyCols.map(col) ++ srcExtra.map(c => col(c).as(s"s_$c")) :+
+            lit(1).as("__matched")): _*)
+        val rewritten = dirty.map { t =>
+          val joined = t.rows.join(srcRenamed, keyCols, "left")
+          def cond(c: Option[Column]): Column = c
+            .map(cc => col("__matched").isNotNull && coalesce(cc, lit(false)))
+            .getOrElse(lit(false))
+          val del = cond(deleteWhen)
+          val upd = !del && cond(updateWhen)
+          val kept = joined.filter(!del && !upd)
+            .select(snapCols.map(col).toSeq: _*)
+          val updated = joined.filter(upd)
+            .select(snapCols.map { f =>
+              if (srcExtra.contains(f)) col(s"s_$f").as(f) else col(f)
+            }.toSeq: _*)
+          // columns the UPDATE clause writes from the source are exempt from
+          // dead-column pruning: after drop+re-add, a column can be dead in
+          // every dirty dir yet carry source-supplied update values — pruning
+          // would silently discard them while same-commit inserts kept theirs
+          // (r17 ADVICE). Delete-only merges (no update clause) still prune.
+          val updExempt = if (updateWhen.isDefined)
+            srcExtra.filter(snapCols.contains).toSet else Set.empty[String]
+          t.pruned(kept.unionByName(updated), exempt = updExempt)
+        }
+        // all matches live in dirty directories (that is what dirty MEANS),
+        // so unmatched = source minus the dirty union's keys. Inserts are
+        // PROJECTED ONTO THE SNAPSHOT SCHEMA: a source column the table
+        // lacks is visible to the s_ clause conditions but never written —
+        // updates already drop it (the rewrite projects the snapshot
+        // columns), and letting inserts carry it would half-evolve the
+        // table in one commit (mixed-schema directories whose default
+        // non-mergeSchema reads become file-order dependent). merge never
+        // evolves schema; evolve via append, which reads back under
+        // mergeSchema.
+        val srcKept = source.columns.filter(snapCols.contains).toSeq
+        val inserts = if (!insertUnmatched) None else Some(
+          dirty.fold(source)(t => source.join(
+            t.rows.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti"))
+            .select(srcKept.map(col): _*))
+        val pieces = rewritten.toSeq ++ inserts.toSeq
+        Some(if (pieces.isEmpty)
+          readDirsAs(spark, s.rootP, s.base.dataDirs.take(1), s.schema).limit(0)
+        else pieces.reduce(_.unionByName(_, allowMissingColumns = true)))
+      }
     }
-    val srcExtra = src.columns.filterNot(keyCols.contains).toSeq
-    srcExtra.foreach(c => require(!snap.fieldNames.contains(s"s_$c"),
-      s"merge: target column s_$c collides with the s_ source prefix"))
-    val srcRenamed = src.select(
-      (keyCols.map(col) ++ srcExtra.map(c => col(c).as(s"s_$c")) :+
-        lit(1).as("__matched")): _*)
-    // the dirty union feeds the rewrite AND the unmatched-insert
-    // anti-join: persist via the registry so it scans once
-    val dirtyUnion =
-      if (dirty.isEmpty) None
-      else Some(graft.engine.Caches.persisted(
-        dirty.map(resolved).reduce(_.unionByName(_))))
-    val rewritten = dirtyUnion.map { t =>
-      val joined = t.join(srcRenamed, keyCols, "left")
-      def cond(c: Option[Column]): Column = c
-        .map(cc => col("__matched").isNotNull && coalesce(cc, lit(false)))
-        .getOrElse(lit(false))
-      val del = cond(deleteWhen)
-      val upd = !del && cond(updateWhen)
-      val kept = joined.filter(!del && !upd)
-        .select(snap.fieldNames.map(col).toSeq: _*)
-      val updated = joined.filter(upd)
-        .select(snap.fieldNames.map { f =>
-          if (srcExtra.contains(f)) col(s"s_$f").as(f) else col(f)
-        }.toSeq: _*)
-      // columns the UPDATE clause writes from the source are exempt from
-      // dead-column pruning: after drop+re-add, a column can be dead in
-      // every dirty dir yet carry source-supplied update values — pruning
-      // would silently discard them while same-commit inserts kept theirs
-      // (r17 ADVICE). Delete-only merges (no update clause) still prune.
-      val updExempt = if (updateWhen.isDefined)
-        srcExtra.filter(snap.fieldNames.contains).toSet else Set.empty[String]
-      pruneDeadCols(spark, rootP, kept.unionByName(updated), dirty, drops,
-        exempt = updExempt)
-    }
-    // all matches live in dirty directories (that is what dirty MEANS),
-    // so unmatched = source minus the dirty union's keys. Inserts are
-    // PROJECTED ONTO THE SNAPSHOT SCHEMA: a source column the table
-    // lacks is visible to the s_ clause conditions but never written —
-    // updates already drop it (the rewrite projects snap.fieldNames),
-    // and letting inserts carry it would half-evolve the table in one
-    // commit (mixed-schema directories whose default non-mergeSchema
-    // reads become file-order dependent). merge never evolves schema;
-    // evolve via append, which reads back under mergeSchema.
-    val srcKept = src.columns.filter(snap.fieldNames.contains).toSeq
-    val inserts = if (!insertUnmatched) None else Some(
-      dirtyUnion.fold(src)(t => src.join(
-        t.select(keyCols.map(col): _*).distinct(), keyCols, "left_anti"))
-        .select(srcKept.map(col): _*))
-    val pieces = rewritten.toSeq ++ inserts.toSeq
-    val merged = if (pieces.isEmpty)
-      readDirsAs(spark, rootP, base.dataDirs.take(1), snap).limit(0)
-    else pieces.reduce(_.unionByName(_, allowMissingColumns = true))
-    val dirs = clean :+ writeDataDir(merged, rootP, v, base.partitionCols)
-    commit(fs, rootP, Manifest(v, "merge", base.version, dirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = liveTombs(tombs, dirs)))
   }
 
   /** CDC apply — [[changesSince]]'s consumer half: replays a delta frame
@@ -1743,61 +1721,45 @@ object VersionedTable {
     * row semi-join probe) carry over by name; dirty ones rewrite minus
     * the deletes, with the inserts landing in the same new directory.
     * An empty delta commits a no-op version (the sync IS recorded). */
-  def applyChanges(spark: SparkSession, root: String, delta: DataFrame,
-      probeParallelism: Int = 4): Manifest = {
+  def applyChanges(spark: SparkSession, root: String,
+      delta: DataFrame): Manifest = {
     require(delta.columns.contains("_change"),
       "applyChanges expects the _change column produced by changes()")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    val cols = snap.fieldNames.toSeq
+    val s = new Snapshot(spark, root)
+    val cols = s.schema.fieldNames.toSeq
     // CDC deletes are exact MULTISET row matches on physical values
     // (exceptAll) — drop masking would null values out from under them,
     // and skipping the mask would let the rewrite resurrect dead values
     // under a fresh directory name. Neither is acceptable: require the
     // mapping debt settled (compact) before replaying CDC onto
-    // directories a drop-column commit predates.
-    require(!dropChain(fs, rootP, base.version).exists(
-        _.dead.values.exists(_.exists(base.dataDirs.contains))),
+    // directories a drop-column commit predates. With no dead values in
+    // the snapshot, the survivors need no pruning either: they keep the
+    // full snapshot schema the inserts carry.
+    require(!s.drops.exists(
+        _.dead.values.exists(_.exists(s.base.dataDirs.contains))),
       "applyChanges: snapshot carries dropped-column directories — " +
         "compact() first to materialize the column mapping")
-    def shaped(tag: String): DataFrame = graft.engine.Caches.persisted(
-      delta.filter(col("_change") === tag).select(cols.map(col): _*))
+    def shaped(tag: String): DataFrame =
+      delta.filter(col("_change") === tag).select(cols.map(col): _*)
     val deletes = shaped("delete")
     val inserts = shaped("insert")
-    // MOR-resolved per-dir view (see deleteWhere)
-    val tombs = tombScopes(fs, rootP, base)
-    def resolved(d: String): DataFrame = applyTombs(spark, rootP,
-      readDirsAs(spark, rootP, Seq(d), snap),
-      tombs.filter(_._2.contains(d)).map(_._1))
-    val (dirty, clean) =
-      if (deletes.isEmpty) (Seq.empty[String], base.dataDirs)
-      else partitionDirty(base.dataDirs, probeParallelism) { d =>
-        !resolved(d).join(deletes, cols, "left_semi").isEmpty
+    opScoped(Seq(deletes, inserts)) {
+      val anyDeletes = !deletes.isEmpty
+      rewrite(s, "cdc")(d => anyDeletes &&
+          !s.resolved(d).join(deletes, cols, "left_semi").isEmpty) {
+        case Some(t) => Some(t.rows.exceptAll(deletes).unionByName(inserts))
+        case None => if (inserts.isEmpty) None else Some(inserts)
       }
-    val survivors =
-      if (dirty.isEmpty) None
-      else Some(dirty.map(resolved).reduce(_.unionByName(_))
-        .exceptAll(deletes))
-    val incoming = survivors.fold(inserts)(_.unionByName(inserts))
-    val dirs =
-      if (dirty.isEmpty && inserts.isEmpty) base.dataDirs
-      else clean :+ writeDataDir(incoming, rootP, v, base.partitionCols)
-    commit(fs, rootP, Manifest(v, "cdc", base.version, dirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = liveTombs(tombs, dirs)))
+    }
   }
 
   /** Roll the table back to `toVersion`'s snapshot as a NEW commit (the
     * log is append-only; history is never erased). */
   def rollback(spark: SparkSession, root: String, toVersion: Int): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = requireExists(spark, root)
-    val target = readManifest(fs, rootP, toVersion)
-    commit(fs, rootP, Manifest(base + 1, "rollback", base, target.dataDirs,
-      partitionCols = target.partitionCols,
-      deleteDirs = target.deleteDirs))
+    val s = new Snapshot(spark, root)
+    val target = readManifest(s.fs, s.rootP, toVersion)
+    s.commit("rollback", target.dataDirs, target.deleteDirs,
+      partitionCols = target.partitionCols)
   }
 
   /** Rewrite the current snapshot as ONE directory (small-file + log-growth
@@ -1817,23 +1779,18 @@ object VersionedTable {
     * query order. */
   def compact(spark: SparkSession, root: String,
       clusterCol: Option[String] = None, nRanges: Int = 8): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
+    val s = new Snapshot(spark, root)
     // MOR-resolved: compact is also what MATERIALIZES outstanding
     // tombstones (the subtraction is burned into the rewrite and the
     // manifest carries none forward — read-side anti-joins end here)
     // — and the column-mapping debt: the rewrite lands under LOGICAL
-    // column names with dropped columns masked and pruned (mappedRead),
-    // so post-compact directories carry the current schema physically
-    // (identity when no renames/drops exist)
-    val snapshot = mappedRead(spark, fs, rootP, base, base.version,
-      mergeSchema = true)
+    // column names with dropped columns masked and pruned (the mapped
+    // read), so post-compact directories carry the current schema
+    // physically (identity when no renames/drops exist)
+    val snapshot = s.read(mergeSchema = true)
     val laidOut = clusterCol.fold(snapshot)(c =>
       snapshot.repartitionByRange(nRanges, col(c)).sortWithinPartitions(c))
-    commit(fs, rootP, Manifest(v, "compact", base.version,
-      Seq(writeDataDir(laidOut, rootP, v, base.partitionCols)),
-      partitionCols = base.partitionCols))
+    s.commit("compact", Seq(s.write(laidOut)), Nil)
   }
 
   /** SELECTIVE compaction — Delta `OPTIMIZE [WHERE]` economics, next to
@@ -1871,42 +1828,19 @@ object VersionedTable {
     * name); byte-identity of clean dirs and the selector/tombstone
     * edges pinned in VersionedTableSpec. */
   def compactWhere(spark: SparkSession, root: String,
-      where: Option[Column] = None, maxRows: Option[Long] = None,
-      probeParallelism: Int = 4): Manifest = {
+      where: Option[Column] = None, maxRows: Option[Long] = None): Manifest = {
     require(where.nonEmpty || maxRows.nonEmpty,
       "compactWhere needs a selector: where predicate and/or maxRows")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    val tombs = tombScopes(fs, rootP, base)
-    def dirTombs(d: String): Seq[String] =
-      tombs.filter(_._2.contains(d)).map(_._1)
-    val drops = dropChain(fs, rootP, base.version)
-    def resolved(d: String): DataFrame = maskDeadDir(applyTombs(spark, rootP,
-      readDirsAs(spark, rootP, Seq(d), snap), dirTombs(d)), d, drops)
+    val s = new Snapshot(spark, root)
     val small: Set[String] = maxRows.fold(Set.empty[String]) { t =>
-      base.dataDirs.filter(d =>
-        readStats(fs, rootP, d).fold(true)(_.rows <= t)).toSet
+      s.base.dataDirs.filter(d =>
+        readStats(s.fs, s.rootP, d).fold(true)(_.rows <= t)).toSet
     }
-    // probe only dirs the small-selector didn't already take
-    val candidates = base.dataDirs.filterNot(small)
-    val hit: Set[String] = where.fold(Set.empty[String]) { c =>
-      partitionDirty(candidates, probeParallelism) { d =>
-        !resolved(d).filter(c).isEmpty
-      }._1.toSet
-    }
-    val qualifying = base.dataDirs.filter(d => small(d) || hit(d))
-    val clean = base.dataDirs.filterNot(d => small(d) || hit(d))
-    val foldsTombs = qualifying.exists(d => dirTombs(d).nonEmpty)
-    if (qualifying.size < 2 && !foldsTombs) base
-    else {
-      val packed = pruneDeadCols(spark, rootP,
-        qualifying.map(resolved).reduce(_.unionByName(_)), qualifying, drops)
-      val dirs = clean :+ writeDataDir(packed, rootP, v, base.partitionCols)
-      commit(fs, rootP, Manifest(v, "optimize", base.version, dirs,
-        partitionCols = base.partitionCols,
-        deleteDirs = liveTombs(tombs, dirs)))
+    // a small dir qualifies without a probe
+    rewrite(s, "optimize",
+        skip = q => q.size < 2 && !q.exists(s.dirTombs(_).nonEmpty))(d =>
+      small(d) || where.exists(c => !s.resolved(d).filter(c).isEmpty)) {
+      _.map(t => t.pruned(t.rows))
     }
   }
 
@@ -1935,51 +1869,45 @@ object VersionedTable {
       clusterCol: String, k: Int, tieCol: String,
       bands: Int = 32): Manifest = {
     require(k >= 2 && k <= 256, s"k must be in 2..256: $k")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    val tombs = tombScopes(fs, rootP, base)
-    def dirTombs(d: String): Seq[String] =
-      tombs.filter(_._2.contains(d)).map(_._1)
-    val drops = dropChain(fs, rootP, base.version)
-    // barrierCut (r18): the frame feeds the bounds agg, the banding join
-    // AND every bucket write — cut once so each consumer plans a leaf.
-    val resolvedAll = graft.engine.Barriers.cut(
-      pruneDeadCols(spark, rootP,
-        base.dataDirs.map(d => maskDeadDir(applyTombs(spark, rootP,
-          readDirsAs(spark, rootP, Seq(d), snap), dirTombs(d)), d, drops))
-          .reduce(_.unionByName(_)),
-        base.dataDirs, drops))
+    val s = new Snapshot(spark, root)
+    rankBucketRewrite(s, "optimize-cluster", s.resolvedUnion(s.base.dataDirs),
+      clusterCol, tieCol, k, bands)
+  }
+
+  /** [[optimizeClustered]]'s and [[optimizeZOrder]]'s shared rewrite:
+    * every row of `rows` lands in one of `k` directories split by EXACT
+    * equal-count rank buckets over `(key, tieCol)` — `(rank−1)·k div n`,
+    * the rank being the banded global prefix-sum
+    * ([[graft.engine.Banding]], no single-partition window). `layout`
+    * columns steer the split but are not written. barrierCut (r18): the
+    * resolved frame feeds the bounds agg, the banding join AND every
+    * bucket write, so it is cut once and each consumer plans a leaf
+    * instead of re-optimizing the per-dir mask/prune union. */
+  private def rankBucketRewrite(s: Snapshot, op: String, rows: DataFrame,
+      key: String, tieCol: String, k: Int, bands: Int,
+      layout: Seq[String] = Nil): Manifest = {
+    val resolvedAll = graft.engine.Barriers.cut(rows)
     val W = org.apache.spark.sql.expressions.Window
-    val cc = col(clusterCol)
+    val kc = col(key)
     val bounds = broadcast(resolvedAll.agg(
-      min(cc).as("__lo"), max(cc).as("__hi"), count(lit(1)).as("__n")))
+      min(kc).as("__lo"), max(kc).as("__hi"), count(lit(1)).as("__n")))
     val banded = resolvedAll.crossJoin(bounds)
       .withColumn("__band", graft.engine.Banding.bandAsc(
-        cc, col("__lo"), col("__hi"), bands))
+        kc, col("__lo"), col("__hi"), bands))
     val offsets = banded.groupBy(col("__band"))
       .agg(count(lit(1)).as("__bn"))
       .withColumn("__off", coalesce(sum(col("__bn")).over(
         W.orderBy(col("__band")).rowsBetween(Long.MinValue, -1)), lit(0L)))
       .select(col("__band"), col("__off"))
-    val wB = W.partitionBy(col("__band")).orderBy(cc, col(tieCol))
+    val wB = W.partitionBy(col("__band")).orderBy(kc, col(tieCol))
     val ranked = graft.engine.Barriers.cut(
       banded.join(broadcast(offsets), "__band")
         .withColumn("__rank", col("__off") + row_number().over(wB))
         .withColumn("__bucket", expr(s"(__rank - 1) * $k div __n")))
-    val present = ranked.select(col("__bucket")).distinct()
-      .collect().map(_.getLong(0)).sorted // bounded: ≤ k values
     // data columns of the (possibly drop-pruned) resolved frame, not the
     // raw snapshot union — a pruned dead column must stay out
-    val fields = resolvedAll.columns.map(col).toSeq
-    val dirs = present.map { b =>
-      writeDataDir(ranked.filter(col("__bucket") === b).select(fields: _*),
-        rootP, v, base.partitionCols)
-    }.toSeq
-    commit(fs, rootP, Manifest(v, "optimize-cluster", base.version, dirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = liveTombs(tombs, dirs)))
+    commitBuckets(s, op, ranked, "__bucket",
+      resolvedAll.columns.filterNot(layout.contains).toSeq)
   }
 
   /** OPTIMIZE ... ZORDER BY (a, b) — [[optimizeClustered]]'s
@@ -2012,54 +1940,11 @@ object VersionedTable {
       colA: String, colB: String, k: Int, tieCol: String,
       bands: Int = 32): Manifest = {
     require(k >= 2 && k <= 256, s"k must be in 2..256: $k")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    val v = base.version + 1
-    val snap = cowSnapshot(spark, fs, rootP, base)
-    val tombs = tombScopes(fs, rootP, base)
-    def dirTombs(d: String): Seq[String] =
-      tombs.filter(_._2.contains(d)).map(_._1)
-    val drops = dropChain(fs, rootP, base.version)
-    // barrierCut (r18): same economics as optimizeClustered — one cut,
-    // every downstream consumer (bounds, banding, bucket writes) plans
-    // a leaf instead of re-optimizing the per-dir mask/prune union.
-    val resolvedAll = graft.engine.Barriers.cut(
-      pruneDeadCols(spark, rootP,
-        base.dataDirs.map(d => maskDeadDir(applyTombs(spark, rootP,
-          readDirsAs(spark, rootP, Seq(d), snap), dirTombs(d)), d, drops))
-          .reduce(_.unionByName(_)),
-        base.dataDirs, drops)
-        .withColumn("__z", call_function("graft_zorder2",
-          col(colA).cast("long"), col(colB).cast("long"))))
-    val W = org.apache.spark.sql.expressions.Window
-    val bounds = broadcast(resolvedAll.agg(
-      min(col("__z")).as("__lo"), max(col("__z")).as("__hi"),
-      count(lit(1)).as("__n")))
-    val banded = resolvedAll.crossJoin(bounds)
-      .withColumn("__band", graft.engine.Banding.bandAsc(
-        col("__z"), col("__lo"), col("__hi"), bands))
-    val offsets = banded.groupBy(col("__band"))
-      .agg(count(lit(1)).as("__bn"))
-      .withColumn("__off", coalesce(sum(col("__bn")).over(
-        W.orderBy(col("__band")).rowsBetween(Long.MinValue, -1)), lit(0L)))
-      .select(col("__band"), col("__off"))
-    val wB = W.partitionBy(col("__band")).orderBy(col("__z"), col(tieCol))
-    val ranked = graft.engine.Barriers.cut(
-      banded.join(broadcast(offsets), "__band")
-        .withColumn("__rank", col("__off") + row_number().over(wB))
-        .withColumn("__bucket", expr(s"(__rank - 1) * $k div __n")))
-    val present = ranked.select(col("__bucket")).distinct()
-      .collect().map(_.getLong(0)).sorted // bounded: ≤ k values
-    // the z value is layout (never written); data columns come from the
-    // (possibly drop-pruned) resolved frame, not the raw snapshot union
-    val fields = resolvedAll.columns.filterNot(_ == "__z").map(col).toSeq
-    val dirs = present.map { b =>
-      writeDataDir(ranked.filter(col("__bucket") === b).select(fields: _*),
-        rootP, v, base.partitionCols)
-    }.toSeq
-    commit(fs, rootP, Manifest(v, "optimize-zorder", base.version, dirs,
-      partitionCols = base.partitionCols,
-      deleteDirs = liveTombs(tombs, dirs)))
+    val s = new Snapshot(spark, root)
+    rankBucketRewrite(s, "optimize-zorder",
+      s.resolvedUnion(s.base.dataDirs).withColumn("__z", call_function(
+        "graft_zorder2", col(colA).cast("long"), col(colB).cast("long"))),
+      "__z", tieCol, k, bands, layout = Seq("__z"))
   }
 
   /** Two-dimensional data-skipping probe — [[pruneDirs]] on a BOX:
@@ -2471,17 +2356,16 @@ object VersionedTable {
       name: String): Manifest = {
     val (fs, rootP) = fsOf(spark, root)
     val (fork, head) = requireBranch(fs, rootP, name)
-    val mainHead = requireExists(spark, root)
-    val baseM = readManifest(fs, rootP, mainHead)
-    if (head == 0) baseM
+    val s = new Snapshot(spark, root)
+    val mainHead = s.base.version
+    if (head == 0) s.base
     else {
       require(mainHead == fork,
         s"cannot fast-forward '$name': main moved $fork -> $mainHead " +
           "since the fork; re-branch from the new head and re-apply")
       val bm = branchHeadManifest(fs, rootP, name, fork, head)
-      val m = commit(fs, rootP, Manifest(mainHead + 1, "fast-forward",
-        mainHead, bm.dataDirs, partitionCols = bm.partitionCols,
-        deleteDirs = bm.deleteDirs))
+      val m = s.commit("fast-forward", bm.dataDirs, bm.deleteDirs,
+        partitionCols = bm.partitionCols)
       writeBranchRef(fs, rootP, name, m.version, 0)
       m
     }
@@ -2662,11 +2546,10 @@ object VersionedTable {
   def addGeneratedColumn(spark: SparkSession, root: String, name: String,
       sqlExpr: String): Unit = {
     require(name.matches("[A-Za-z0-9_]+"), s"illegal column name: $name")
-    val (fs, rootP) = fsOf(spark, root)
-    val base = readManifest(fs, rootP, requireExists(spark, root))
-    require(!base.partitionCols.contains(name),
+    val s = new Snapshot(spark, root)
+    require(!s.base.partitionCols.contains(name),
       s"cannot generate partition column: $name")
-    val cur = readLatest(spark, root, mergeSchema = true)
+    val cur = s.read(mergeSchema = true)
     if (cur.columns.contains(name)) {
       val bad = !cur
         .filter(!coalesce(col(name) === expr(sqlExpr), lit(true))).isEmpty
@@ -2675,8 +2558,8 @@ object VersionedTable {
           s"cannot declare '$name' GENERATED ALWAYS AS ($sqlExpr): " +
             "existing rows disagree with the expression")
     } else cur.select(expr(sqlExpr)) // analysis-only schema check
-    val dst = new Path(generatedDir(rootP), name)
-    val out = fs.create(dst, false) // exclusive: duplicate declare fails
+    val dst = new Path(generatedDir(s.rootP), name)
+    val out = s.fs.create(dst, false) // exclusive: duplicate declare fails
     try out.write(sqlExpr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
   }
@@ -3260,17 +3143,16 @@ object VersionedTable {
     * constraint carry-over pinned in VersionedTableSpec. */
   def cloneTable(spark: SparkSession, srcRoot: String, dstRoot: String,
       asOfVersion: Option[Int] = None): Manifest = {
-    val (sfs, srcP) = fsOf(spark, srcRoot)
     val (dfs, dstP) = fsOf(spark, dstRoot)
     require(latestVersion(spark, dstRoot) == 0, s"table exists at $dstRoot")
-    val v = asOfVersion.getOrElse(requireExists(spark, srcRoot))
-    val m = readManifest(sfs, srcP, v)
+    val src = new Snapshot(spark, srcRoot, asOfVersion)
+    val (sfs, srcP, m) = (src.fs, src.rootP, src.base)
+    val v = m.version
     val conf = spark.sparkContext.hadoopConfiguration
-    val mapped = renameChain(sfs, srcP, v).nonEmpty ||
-      dropChain(sfs, srcP, v).nonEmpty ||
+    val mapped = src.renames.nonEmpty || src.drops.nonEmpty ||
       // a widened source byte-copied as-is would strand the clone with
       // mixed physical widths and no chain to unify them — materialize
-      widenOps(sfs, srcP, v).nonEmpty ||
+      src.widens.nonEmpty ||
       // a shallow-clone source's directories live under ITS donor —
       // materialize rather than chain byte-copies across roots
       readDonor(sfs, srcP).nonEmpty
@@ -3288,8 +3170,8 @@ object VersionedTable {
         // mapping chain to re-apply, so the rewrite lands the logical
         // schema physically (renames folded, dropped columns out, MOR
         // tombstones burned in) — the compact economics, paid once
-        Seq(writeDataDir(mappedRead(spark, sfs, srcP, m, v,
-          mergeSchema = true), dstP, 1, m.partitionCols))
+        Seq(writeDataDir(src.read(mergeSchema = true), dstP, 1,
+          m.partitionCols))
     activeConstraints(sfs, srcP).foreach { case (name, e) =>
       val out = dfs.create(new Path(constraintsDir(dstP), name), false)
       try out.write(e.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -3358,8 +3240,8 @@ object VersionedTable {
     require(sfs.getUri == dfs.getUri,
       "shallow clone requires source and destination on one filesystem " +
         s"(${sfs.getUri} vs ${dfs.getUri})")
-    val v = asOfVersion.getOrElse(requireExists(spark, srcRoot))
-    val m = readManifest(sfs, srcP, v)
+    val src = new Snapshot(spark, srcRoot, asOfVersion)
+    val (m, v) = (src.base, src.base.version)
     val donorDirs = (m.dataDirs ++ m.deleteDirs).distinct
     val utf8 = java.nio.charset.StandardCharsets.UTF_8
     // donor marker first: every read of the clone resolves through it
@@ -3375,8 +3257,7 @@ object VersionedTable {
     try pout.write((dstP.toString +: donorDirs).mkString("\n")
       .getBytes(utf8))
     finally pout.close()
-    existingVersions(sfs, srcP).filter(_ <= v).sorted
-      .map(readManifest(sfs, srcP, _))
+    src.log
       .filter(x => x.op == "rename-column" || x.op == "drop-column" ||
         x.op == "widen-column")
       .foreach(x => commit(dfs, dstP, x))

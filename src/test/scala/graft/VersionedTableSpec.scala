@@ -2272,4 +2272,111 @@ class VersionedTableSpec extends SparkTestBase {
     assert(vv.agg(sum(col("v"))).head.getLong(0) === 210L)
     graft.engine.Caches.releaseAll()
   }
+
+  test("copy-on-write kernel: one dirty directory rewritten, the rest " +
+      "carried by name, tombstone kept iff its scope survives, no dropped " +
+      "value back, latest equals the model") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileUtil, Path}
+    val conf = spark.sparkContext.hadoopConfiguration
+    // d1 k 1..10, a tombstone {3, 13, 23} scoped to d1 alone (only 3
+    // dies), d2 k 11..20, `note` dropped (dead in d1 and d2), d3 k 21..30
+    def rows(ks: Range) =
+      ks.map(k => (k.toLong, k * 10L, s"n$k")).toDF("k", "v", "note")
+    val fixture = freshRoot("kernel_fixture")
+    VersionedTable.create(spark, fixture, rows(1 to 10))
+    val tombs = VersionedTable.deleteKeysMor(spark, fixture,
+      Seq(3L, 13L, 23L).toDF("k")).deleteDirs
+    VersionedTable.append(spark, fixture, rows(11 to 20))
+    VersionedTable.dropColumn(spark, fixture, "note")
+    VersionedTable.append(spark, fixture, rows(21 to 30).drop("note"))
+    val base = VersionedTable.dataDirsOf(spark, fixture)
+    assert(base.size === 3 && tombs.size === 1)
+    val model0 = (1L to 30L).filterNot(_ == 3L).map(k => k -> k * 10L).toMap
+
+    // (op, run on `root` dirtying the directory holding key `kk`, the
+    // model after it, whether it rewrites a lone tombstone-free dir)
+    type Op = (String, (String, Long) => VersionedTable.Manifest,
+      (Map[Long, Long], Long) => Map[Long, Long], Boolean)
+    val ops: Seq[Op] = Seq(
+      ("deleteWhere", (r, kk) => VersionedTable.deleteWhere(spark, r,
+        col("k") === kk), (m, kk) => m - kk, true),
+      ("replaceWhere", (r, kk) => VersionedTable.replaceWhere(spark, r,
+        Seq((kk, -kk)).toDF("k", "v"), col("k") === kk),
+        (m, kk) => m + (kk -> -kk), true),
+      ("upsert", (r, kk) => VersionedTable.upsert(spark, r,
+        Seq((kk, 1000 + kk), (100 + kk, 1L)).toDF("k", "v"), Seq("k")),
+        (m, kk) => m + (kk -> (1000 + kk)) + ((100 + kk) -> 1L), true),
+      ("merge", (r, kk) => VersionedTable.merge(spark, r,
+        Seq((kk, 2000 + kk), (200 + kk, 2L)).toDF("k", "v"), Seq("k")),
+        (m, kk) => m + (kk -> (2000 + kk)) + ((200 + kk) -> 2L), true),
+      // one qualifying dir with no tombstone to fold is a no-op
+      ("compactWhere", (r, kk) => VersionedTable.compactWhere(spark, r,
+        where = Some(col("k") === kk)), (m, _) => m, false))
+    for ((name, run, model, rewritesLone) <- ops;
+         (target, kk) <- base.zip(Seq(5L, 15L, 25L))) {
+      val what = s"$name dirtying $target"
+      val root = freshRoot(s"kernel_$name")
+      val fs = new Path(root).getFileSystem(conf)
+      FileUtil.copy(fs, new Path(fixture), fs, new Path(root), false, conf)
+      val m = run(root, kk)
+      assert(m.dataDirs === VersionedTable.dataDirsOf(spark, root), what)
+      val rewritten = rewritesLone || target == base.head
+      assert(base.filterNot(_ == target).forall(m.dataDirs.contains),
+        s"$what: untouched dirs must carry over by name: ${m.dataDirs}")
+      assert(m.dataDirs.contains(target) === !rewritten, s"$what: ${m.dataDirs}")
+      assert(m.dataDirs.size === 3, s"$what: one new directory: ${m.dataDirs}")
+      assert(m.deleteDirs === (if (m.dataDirs.contains(base.head)) tombs
+        else Nil), s"$what: the tombstone stays iff d1 survives")
+      val latest = VersionedTable.readLatest(spark, root, mergeSchema = true)
+      assert(!latest.columns.contains("note"), s"$what: ${latest.columns}")
+      m.dataDirs.filterNot(base.contains).foreach { d =>
+        assert(!spark.read.parquet(s"$root/$d").columns.contains("note"),
+          s"$what: dropped values rewritten into $d")
+      }
+      val got = latest.select("k", "v").collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got === model(model0, kk), what)
+    }
+    graft.engine.Caches.releaseAll()
+  }
+
+  test("upsert, merge and applyChanges release every cache they take") {
+    import spark.implicits._
+    val cacheManager = spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
+    graft.engine.Caches.releaseAll()
+    val root = freshRoot("op_scoped_caches")
+    VersionedTable.create(spark, root, Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    VersionedTable.append(spark, root, Seq((3L, 30L)).toDF("k", "v"))
+    def leavesNoCache(op: String)(run: => Unit): Unit = {
+      val before = graft.engine.Caches.liveCount
+      run
+      assert(graft.engine.Caches.liveCount === before,
+        s"$op left a Caches registration")
+      assert(cacheManager.isEmpty, s"$op left a CacheManager entry")
+    }
+    leavesNoCache("upsert")(VersionedTable.upsert(spark, root,
+      Seq((2L, 21L), (4L, 40L)).toDF("k", "v"), Seq("k")))
+    leavesNoCache("merge")(VersionedTable.merge(spark, root,
+      Seq((3L, 31L), (5L, 50L)).toDF("k", "v"), Seq("k")))
+    val replica = freshRoot("op_scoped_caches_replica")
+    VersionedTable.create(spark, replica, VersionedTable.readVersion(spark, root, 1))
+    val (delta, _) = VersionedTable.changesSince(spark, root, 1)
+    leavesNoCache("applyChanges")(
+      VersionedTable.applyChanges(spark, replica, delta))
+    def contents(r: String) = VersionedTable.readLatest(spark, r)
+      .orderBy("k").collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
+    assert(contents(replica) === contents(root))
+    assert(contents(root) === Seq((1L, 10L), (2L, 21L), (3L, 31L), (4L, 40L),
+      (5L, 50L)))
+    // a frame the caller cached stays cached
+    val src = Seq((1L, 11L)).toDF("k", "v").cache()
+    VersionedTable.merge(spark, root, src, Seq("k"))
+    assert(src.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+    src.unpersist()
+    graft.engine.Caches.releaseAll()
+  }
 }
