@@ -1,6 +1,8 @@
 package graft.tables
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType,
@@ -75,6 +77,36 @@ object VersionedTable {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  // ---- the one metadata-file reader and writer ---------------------------
+
+  /** Every metadata file (manifests, tags, branch refs, donor, `_applies`,
+    * `_stats`, constraint and generated declarations, clone pins) is read
+    * whole through here, to EOF. */
+  private def readBytes(fs: FileSystem, p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try in.readAllBytes() finally in.close()
+  }
+
+  private def readText(fs: FileSystem, p: Path): String =
+    new String(readBytes(fs, p), UTF_8)
+
+  /** ... and written through here. `overwrite = false` is the exclusive
+    * create (data-dir claims, sidecars, declarations, donor, clone pins);
+    * tags, branch refs and the manifest tmp overwrite. */
+  private def writeText(fs: FileSystem, p: Path, text: String,
+      overwrite: Boolean): Unit = {
+    val out = fs.create(p, overwrite)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** Name -> text of every file directly under `dir`, sorted by name
+    * (empty when `dir` is absent): the declaration, tag, branch-ref and
+    * clone-pin stores are all this shape. */
+  private def textsUnder(fs: FileSystem, dir: Path): Seq[(String, String)] =
+    if (!fs.exists(dir)) Nil
+    else fs.listStatus(dir).toSeq.filter(_.isFile).map(_.getPath)
+      .sortBy(_.getName).map(p => p.getName -> readText(fs, p))
+
   // ---- shallow-clone donor resolution -----------------------------------
 
   /** `_log/donor` marks a SHALLOW clone: first line the donor root,
@@ -87,13 +119,7 @@ object VersionedTable {
     val p = donorFile(root)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val text = try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-      val lines = text.split("\n").filter(_.nonEmpty)
+      val lines = readText(fs, p).split("\n").filter(_.nonEmpty)
       Some((new Path(lines.head), lines.tail.toSet))
     }
   }
@@ -164,20 +190,26 @@ object VersionedTable {
       array("deleteDirs"))
   }
 
-  private def readManifest(fs: FileSystem, root: Path, v: Int): Manifest = {
-    val in = fs.open(manifestPath(root, v))
-    try {
-      val bytes = new Array[Byte](fs.getFileStatus(manifestPath(root, v)).getLen.toInt)
-      in.readFully(bytes)
-      parseManifest(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-    } finally in.close()
+  /** A main-log or branch-log manifest. Entry points read main-log
+    * manifests through their [[Snapshot]], never through this directly. */
+  private def readManifest(fs: FileSystem, p: Path): Manifest =
+    parseManifest(readText(fs, p))
+
+  /** `_log`'s entries (empty when there is no table). */
+  private def listLog(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    val log = new Path(root, LogDir)
+    if (!fs.exists(log)) Nil else fs.listStatus(log).toSeq
+  }
+
+  /** The version a `_log` entry commits, if it is a manifest. */
+  private def manifestVersion(st: FileStatus): Option[Int] = {
+    val n = st.getPath.getName
+    if (n.matches("\\d{8}\\.json")) Some(n.take(8).toInt) else None
   }
 
   /** Highest committed version, or 0 if the table does not exist. */
-  def latestVersion(spark: SparkSession, root: String): Int = {
-    val (fs, rootP) = fsOf(spark, root)
-    existingVersions(fs, rootP).lastOption.getOrElse(0)
-  }
+  def latestVersion(spark: SparkSession, root: String): Int =
+    new Snapshot(spark, root).lastVersion
 
   /** Atomic commit of `m` as version `m.version`: the manifest is fully
     * written to a dot-prefixed temp (invisible to `latestVersion` and to
@@ -189,14 +221,12 @@ object VersionedTable {
     * private member that the nested [[Snapshot]] calls would not keep
     * its name in bytecode. */
   private[graft] def commit(fs: FileSystem, root: Path, m: Manifest): Manifest =
-    publishManifest(fs, new Path(root, LogDir), manifestPath(root, m.version), m)
+    publishManifest(fs, manifestPath(root, m.version), m)
 
   /** The atomic manifest publish commit() and branch commits share:
     * write-to-dot-tmp, rename, re-read-and-compare (see commit's racing
-    * notes). `log` is the directory holding `dst` and the tmp. */
-  private def publishManifest(fs: FileSystem, log: Path, dst: Path,
-      m: Manifest): Manifest = {
-    if (!fs.exists(log)) fs.mkdirs(log)
+    * notes). The tmp sits next to `dst`. */
+  private def publishManifest(fs: FileSystem, dst: Path, m: Manifest): Manifest = {
     if (fs.exists(dst))
       throw new java.util.ConcurrentModificationException(
         s"version ${m.version} already committed at $dst")
@@ -206,12 +236,11 @@ object VersionedTable {
     // the first writer between its write and its rename — publishing a
     // manifest the "winner" never wrote). Identical content hashing to
     // the same name is harmless: either rename publishes the same bytes.
-    val body = renderManifest(m).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val text = renderManifest(m)
+    val body = text.getBytes(UTF_8)
     val salt = f"${java.util.Arrays.hashCode(body) & 0x7fffffff}%08x"
-    val tmp = new Path(log, f".${m.version}%08d-$salt.json.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(body)
-    finally out.close()
+    val tmp = new Path(dst.getParent, f".${m.version}%08d-$salt.json.tmp")
+    writeText(fs, tmp, text, overwrite = true)
     if (!fs.rename(tmp, dst)) {
       fs.delete(tmp, false)
       throw new java.util.ConcurrentModificationException(
@@ -223,17 +252,7 @@ object VersionedTable {
     // and comparing bytes narrows that window to near-zero on local FS
     // (and is a no-op read of a tiny file on HDFS, where rename-no-
     // replace already guarantees exclusivity).
-    val published = {
-      val in = fs.open(dst)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](8192)
-        var r = in.read(chunk)
-        while (r >= 0) { buf.write(chunk, 0, r); r = in.read(chunk) }
-        buf.toByteArray
-      } finally in.close()
-    }
-    if (!java.util.Arrays.equals(published, body))
+    if (!java.util.Arrays.equals(readBytes(fs, dst), body))
       throw new java.util.ConcurrentModificationException(
         s"commit of version ${m.version} was replaced at $dst by a racing committer")
     m
@@ -241,30 +260,60 @@ object VersionedTable {
 
   // ---- per-operation snapshot and the copy-on-write kernel --------------
 
-  /** One operation's view of the table: the filesystem, the base manifest
-    * (latest, or `at` for time travel) found from ONE `_log` listing, and
-    * everything derived from it.
+  /** One operation's view of the table: the filesystem, ONE `_log`
+    * listing, the base manifest (latest, or `at` for time travel) and
+    * everything derived from them. Every entry point opens one; none
+    * lists `_log` or reads a main-log manifest itself.
     *
-    * Lazy-log rule: [[log]] (the manifests up to the base, each read
-    * once) and everything built from it (the rename, drop and widen
-    * chains, the union [[schema]], the tombstone scopes) are lazy. An
-    * append or a metadata-only commit reads the base manifest alone; a
-    * rewrite or a mapped read pays ONE pass over the log however many
-    * chains it consults. [[commit]] fills in the version, the base
-    * version and the partition columns. */
+    * Lazy-log rule: the listing, [[base]], [[log]] (the manifests up to
+    * the base) and everything built from it (the rename, drop and widen
+    * chains, the union [[schema]], the tombstone scopes) are lazy, and
+    * each manifest and `_stats` sidecar is read at most once. An append
+    * or a metadata-only commit reads the base manifest alone; a rewrite
+    * or a mapped read pays ONE pass over the log however many chains it
+    * consults. [[atVersion]] re-bases the same operation on another
+    * version, sharing the listing and the manifests read so far.
+    * [[commit]] fills in the version, the base version and the
+    * partition columns. */
   private final class Snapshot(val spark: SparkSession, root: String,
-      at: Option[Int] = None) {
+      at: Option[Int] = None, shared: Option[Snapshot] = None) {
     val (fs, rootP) = fsOf(spark, root)
-    private val versions = existingVersions(fs, rootP)
-    val base: Manifest = readManifest(fs, rootP, at.getOrElse {
-      require(versions.nonEmpty, s"no table at $root")
-      versions.last
-    })
+    /** `_log`'s entries from the operation's one listing. */
+    lazy val entries: Seq[FileStatus] =
+      shared.fold(listLog(fs, rootP))(_.entries)
+    /** Each committed version's commit instant (its manifest's mtime,
+      * kept from the listing), ascending by version. */
+    lazy val committedAt: scala.collection.immutable.SortedMap[Int, Long] =
+      scala.collection.immutable.SortedMap(entries.flatMap(st =>
+        manifestVersion(st).map(_ -> st.getModificationTime)): _*)
+    def versions: Seq[Int] = committedAt.keys.toSeq
+    /** The highest committed version, 0 when there is no table. */
+    def lastVersion: Int = committedAt.lastOption.fold(0)(_._1)
+    /** [[lastVersion]] of a table that must exist. */
+    def latest: Int = {
+      require(lastVersion > 0, s"no table at $root")
+      lastVersion
+    }
+
+    private val manifests: scala.collection.mutable.Map[Int, Manifest] =
+      shared.fold(scala.collection.mutable.Map.empty[Int, Manifest])(_.manifests)
+    def manifest(v: Int): Manifest = manifests.synchronized(
+      manifests.getOrElseUpdate(v, readManifest(fs, manifestPath(rootP, v))))
+
+    private val dirStats =
+      scala.collection.mutable.Map.empty[String, Option[DirStat]]
+    def stats(d: String): Option[DirStat] = dirStats.synchronized(
+      dirStats.getOrElseUpdate(d, readStats(fs, rootP, d)))
+
+    /** This operation's snapshot at version `v`. */
+    def atVersion(v: Int): Snapshot = new Snapshot(spark, root, Some(v), Some(this))
+
+    lazy val base: Manifest = manifest(at.getOrElse(latest))
     /** The version this operation commits. */
     def v: Int = base.version + 1
 
     lazy val log: Seq[Manifest] =
-      versions.filter(_ < base.version).map(readManifest(fs, rootP, _)) :+ base
+      versions.filter(_ < base.version).map(manifest) :+ base
     lazy val renames: Seq[(Int, String, String)] = renameOps(log)
     lazy val drops: Seq[DropState] = dropChain(fs, rootP, log)
     lazy val widens: Seq[(Int, String, DataType)] = widenOps(log)
@@ -346,15 +395,22 @@ object VersionedTable {
       s.pruned(df, dirs, exempt)
   }
 
+  /** The snapshot at `version`, latest when 0 (the public ops' rule). */
+  private def snapshotAt(spark: SparkSession, root: String,
+      version: Int): Snapshot =
+    new Snapshot(spark, root, Some(version).filter(_ > 0))
+
   /** The copy-on-write kernel every row-level rewrite is a view of:
     * probe each snapshot directory with `isDirty`, carry the clean ones
     * over by NAME, hand the resolved union of the dirty ones to `body`,
-    * write what it returns (survivors plus incoming rows) as ONE new
-    * directory, and commit with the tombstones still masking a kept
-    * directory. Survivors re-emit under a new name, so the tombstones
-    * folded into them never double-apply. `body` returning None writes
-    * nothing (the snapshot's directories commit as they are); `skip`
-    * holding on the dirty set commits nothing and returns the base.
+    * union what it returns (the survivors) with `incoming(dirty)` (the
+    * op's new rows) by name, missing columns null on either side, write
+    * that as ONE new directory, and commit with the tombstones still
+    * masking a kept directory. Survivors re-emit under a new name, so
+    * the tombstones folded into them never double-apply. Neither side
+    * present writes nothing (the snapshot's directories commit as they
+    * are); `skip` holding on the dirty set commits nothing and returns
+    * the base.
     *
     * Op-scoped cache rule: a rewrite returns its manifest only after
     * its write consumed every frame it cached, so nothing it persists
@@ -362,7 +418,9 @@ object VersionedTable {
     * cached frames go through [[opScoped]], never through the JVM-global
     * [[graft.engine.Caches]] registry. */
   private def rewrite(s: Snapshot, op: String, persistDirty: Boolean = false,
-      skip: Seq[String] => Boolean = _ => false)(isDirty: String => Boolean)(
+      skip: Seq[String] => Boolean = _ => false,
+      incoming: Seq[String] => Option[DataFrame] = _ => None)(
+      isDirty: String => Boolean)(
       body: Option[Dirty] => Option[DataFrame]): Manifest = {
     // resolve what every probe reads here, not inside the first probe
     // thread (the others would block on it, and retry it on failure)
@@ -374,7 +432,8 @@ object VersionedTable {
         if (dirty.isEmpty) None
         else Some(dirty.map(s.resolved).reduce(_.unionByName(_)))
       opScoped(if (persistDirty) union.toSeq else Nil) {
-        val dirs = body(union.map(Dirty(s, dirty, _)))
+        val dirs = (body(union.map(Dirty(s, dirty, _))).toSeq ++ incoming(dirty))
+          .reduceOption(_.unionByName(_, allowMissingColumns = true))
           .fold(s.base.dataDirs)(df => clean :+ s.write(df))
         s.commit(op, dirs, s.liveTombs(dirs))
       }
@@ -454,8 +513,8 @@ object VersionedTable {
       val cand = f"d-$n%08d"
       if (!fs.exists(new Path(root, cand))) {
         try {
-          val out = fs.create(new Path(new Path(root, cand), ".claim"), false)
-          out.close()
+          writeText(fs, new Path(new Path(root, cand), ".claim"), "",
+            overwrite = false)
           dir = cand
         } catch { case _: java.io.IOException => () } // lost the claim race
       }
@@ -495,32 +554,36 @@ object VersionedTable {
     // a constraint expression never leaves an orphan directory behind.
     if (enforce) {
       val cs = activeConstraints(fs, root)
-      if (cs.nonEmpty) {
-        try {
-          val staged = df.sparkSession.read.schema(df.schema)
-            .parquet(new Path(root, dir).toString)
-          cs.foreach { case (n, e) =>
-            // SQL CHECK semantics: NULL passes, only FALSE violates
-            val bad = !staged
-              .filter(!coalesce(expr(e), lit(true))).isEmpty
-            if (bad)
-              throw new ConstraintViolationException(
-                s"write rejected by CHECK constraint '$n' ($e)")
-          }
-        } catch {
-          case e: Throwable =>
-            fs.delete(new Path(root, dir), true)
-            throw e
+      if (cs.nonEmpty) sweepOnFailure(fs, dirPath) {
+        val staged = df.sparkSession.read.schema(df.schema)
+          .parquet(dirPath.toString)
+        cs.foreach { case (n, e) =>
+          // SQL CHECK semantics: NULL passes, only FALSE violates
+          val bad = !staged
+            .filter(!coalesce(expr(e), lit(true))).isEmpty
+          if (bad)
+            throw new ConstraintViolationException(
+              s"write rejected by CHECK constraint '$n' ($e)")
         }
       }
     }
     // dir-level column stats, scraped from the parquet FOOTERS just
     // written (no extra Spark job — Iceberg's commit-time economics);
     // failure to scrape costs only skipping ability, never the commit
-    try writeStats(fs, new Path(root, dir))
+    try writeStats(fs, dirPath)
     catch { case scala.util.control.NonFatal(_) => () }
     dir
   }
+
+  /** Run `body` over the staged (unreferenced) directory `dir`; if it
+    * throws, sweep the directory and rethrow. */
+  private def sweepOnFailure[T](fs: FileSystem, dir: Path)(body: => T): T =
+    try body
+    catch {
+      case e: Throwable =>
+        fs.delete(dir, true)
+        throw e
+    }
 
   /** Create version 1. Fails if the table already has commits.
     * `partitionCols` fixes a table-level hive layout: every data
@@ -530,10 +593,10 @@ object VersionedTable {
     * inherited by all subsequent commits. */
   def create(spark: SparkSession, root: String, df: DataFrame,
       partitionCols: Seq[String] = Nil): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    require(latestVersion(spark, root) == 0, s"table exists at $root")
-    commit(fs, rootP, Manifest(1, "create", 0,
-      Seq(writeDataDir(df, rootP, 1, partitionCols)),
+    val s = new Snapshot(spark, root)
+    require(s.lastVersion == 0, s"table exists at $root")
+    commit(s.fs, s.rootP, Manifest(1, "create", 0,
+      Seq(writeDataDir(df, s.rootP, 1, partitionCols)),
       partitionCols = partitionCols))
   }
 
@@ -547,14 +610,33 @@ object VersionedTable {
     * snapshot) deliberately do NOT retry: they throw, and the caller
     * re-runs the whole operation against the new state. */
   def append(spark: SparkSession, root: String, df: DataFrame,
-      tag: String = ""): Manifest = {
-    val s = new Snapshot(spark, root)
-    val dir = s.write(applyGenerated(s.fs, s.rootP, df))
-    commitAppendLoop(s.fs, s.rootP, dir, tag, s.base.version, AppendRetries)
-  }
+      tag: String = ""): Manifest =
+    appendKernel(new Snapshot(spark, root), df, tag)
 
   /** Lost manifest races an append re-commits through before giving up. */
   private val AppendRetries = 5
+
+  /** The append kernel every main-log append is a view of: stage `df`
+    * ([[stageAppend]]) above the snapshot's version in its layout, then
+    * publish it through [[commitAppendLoop]]. */
+  private def appendKernel(s: Snapshot, df: DataFrame, tag: String,
+      check: String => Unit = _ => ()): Manifest =
+    commitAppendLoop(s.fs, s.rootP,
+      stageAppend(s, df, check, s.v, s.base.partitionCols),
+      tag, s.base.version, AppendRetries)
+
+  /** The staging half of every append, main-log or branch: compute the
+    * generated columns, write the batch as a new directory claimed at or
+    * above `first` (claim, data write, CHECK gate, `_stats`), then run
+    * `check` over the staged directory; a failing check sweeps it and
+    * propagates, leaving the table untouched. */
+  private def stageAppend(s: Snapshot, df: DataFrame, check: String => Unit,
+      first: Int, partitionCols: Seq[String]): String = {
+    val dir = writeDataDir(applyGenerated(s.fs, s.rootP, df), s.rootP,
+      first, partitionCols)
+    sweepOnFailure(s.fs, new Path(s.rootP, dir))(check(dir))
+    dir
+  }
 
   /** IDENTITY-column append (Delta `GENERATED ALWAYS AS IDENTITY`
     * semantics at this format layer): assign `idCol` values continuing
@@ -587,7 +669,7 @@ object VersionedTable {
     // start = current max id: sidecar fast path, else one scan
     val fromStats: Option[Long] = {
       val per = base.dataDirs.map { d =>
-        readStats(s.fs, s.rootP, d) match {
+        s.stats(d) match {
           case Some(ds) if ds.rows == 0L => Some(None)
           case Some(ds) => ds.cols.get(idCol) match {
             case Some(cs) if !cs.hasValues => Some(None)
@@ -613,8 +695,7 @@ object VersionedTable {
         .agg(max(col(idCol).cast("long"))).head
       if (m.isNullAt(0)) 0L else m.getLong(0)
     }
-    val dir = s.write(assignIds(df, idCol, orderCol, start, bands))
-    commitAppendLoop(s.fs, s.rootP, dir, tag, base.version, AppendRetries)
+    appendKernel(s, assignIds(df, idCol, orderCol, start, bands), tag)
   }
 
   /** CREATE with a generated identity column — the version-0 sibling
@@ -739,7 +820,7 @@ object VersionedTable {
     var baseV = baseGuess
     var attempt = 0
     while (true) {
-      val base = readManifest(fs, rootP, baseV)
+      val base = readManifest(fs, manifestPath(rootP, baseV))
       try {
         return commit(fs, rootP, Manifest(base.version + 1, "append",
           base.version, base.dataDirs :+ dir, tag, base.partitionCols,
@@ -750,8 +831,8 @@ object VersionedTable {
         case e: java.util.ConcurrentModificationException =>
           attempt += 1
           if (attempt > maxRetries) throw e
-          baseV = existingVersions(fs, rootP).lastOption.getOrElse(
-            throw new IllegalStateException(s"log vanished under $rootP", e))
+          baseV = listLog(fs, rootP).flatMap(manifestVersion).maxOption
+            .getOrElse(throw new IllegalStateException(s"log vanished under $rootP", e))
       }
     }
     throw new IllegalStateException("unreachable")
@@ -771,19 +852,15 @@ object VersionedTable {
       uniqueKeys: Seq[(String, Seq[String])] = Nil,
       tag: String = ""): Manifest = {
     val s = new Snapshot(spark, root)
-    val dir = s.write(df)
-    val report = graft.operators.Relational.dqReport(
-        readDirs(spark, s.rootP, Seq(dir)), rowRules, uniqueKeys)
-      .collect().map(r => (r.getString(0), r.getLong(1)))
-    val bad = report.filter(_._2 != 0L)
-    if (bad.nonEmpty) {
-      val swept = s.fs.delete(new Path(s.rootP, dir), true)
-      throw new IllegalStateException("appendAudited: audit failed, " +
-        s"table untouched at version ${s.base.version}: " +
-        bad.map { case (n, c) => s"$n=$c" }.mkString(", ") +
-        (if (swept) "" else s"; staging NOT swept at $dir"))
-    }
-    commitAppendLoop(s.fs, s.rootP, dir, tag, s.base.version, AppendRetries)
+    appendKernel(s, df, tag, check = { dir =>
+      val bad = graft.operators.Relational.dqReport(
+          readDirs(spark, s.rootP, Seq(dir)), rowRules, uniqueKeys)
+        .collect().map(r => (r.getString(0), r.getLong(1))).filter(_._2 != 0L)
+      if (bad.nonEmpty)
+        throw new IllegalStateException("appendAudited: audit failed, " +
+          s"table untouched at version ${s.base.version}: " +
+          bad.map { case (n, c) => s"$n=$c" }.mkString(", "))
+    })
   }
 
   /** Idempotent tagged append — the exactly-once sink primitive: if any
@@ -796,20 +873,10 @@ object VersionedTable {
   def appendIfAbsent(spark: SparkSession, root: String, df: DataFrame,
       tag: String): Manifest = {
     require(tag.nonEmpty, "appendIfAbsent requires a non-empty tag")
-    val (fs, rootP) = fsOf(spark, root)
-    requireExists(spark, root)
+    val s = new Snapshot(spark, root)
     // only manifests still present count — vacuuming a tagged manifest
     // intentionally retires its dedup claim with its retention window
-    existingVersions(fs, rootP).map(readManifest(fs, rootP, _))
-      .find(_.tag == tag)
-      .getOrElse(append(spark, root, df, tag))
-  }
-
-  private def existingVersions(fs: FileSystem, root: Path): Seq[Int] = {
-    val log = new Path(root, LogDir)
-    if (!fs.exists(log)) Seq.empty
-    else fs.listStatus(log).map(_.getPath.getName)
-      .filter(_.matches("\\d{8}\\.json")).map(_.take(8).toInt).sorted.toSeq
+    s.log.find(_.tag == tag).getOrElse(appendKernel(s, df, tag))
   }
 
   /** Replace the snapshot wholesale (the `SaveMode.Overwrite` analogue —
@@ -856,12 +923,6 @@ object VersionedTable {
       s.commit("partition-evolve", base.dataDirs, base.deleteDirs,
         partitionCols = newCols)
     }
-  }
-
-  private def requireExists(spark: SparkSession, root: String): Int = {
-    val v = latestVersion(spark, root)
-    require(v > 0, s"no table at $root")
-    v
   }
 
   private def readDirs(spark: SparkSession, root: Path, dirs: Seq[String],
@@ -916,26 +977,17 @@ object VersionedTable {
   private val AppliesFile = "_applies"
 
   private def writeApplies(fs: FileSystem, root: Path, tombDir: String,
-      applies: Seq[String]): Unit = {
-    val out = fs.create(new Path(new Path(root, tombDir), AppliesFile), false)
-    try out.write(applies.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      applies: Seq[String]): Unit =
+    writeText(fs, new Path(new Path(root, tombDir), AppliesFile),
+      applies.mkString("\n"), overwrite = false)
 
   /** The tombstones of `m` with their masked-directory sets — one tiny
     * sidecar read per tombstone, O(tombstones since last compact). */
   private def tombScopes(fs: FileSystem, root: Path,
       m: Manifest): Seq[(String, Set[String])] =
     m.deleteDirs.map { t =>
-      val p = new Path(dataPath(fs, root, t), AppliesFile)
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        t -> new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-          .split("\n").filter(_.nonEmpty).toSet
-      } finally in.close()
+      t -> readText(fs, new Path(dataPath(fs, root, t), AppliesFile))
+        .split("\n").filter(_.nonEmpty).toSet
     }
 
   /** Subtract tombstone key files from `df` — one anti-join per
@@ -1076,15 +1128,15 @@ object VersionedTable {
     * in VersionedTableSpec. */
   def appendStrict(spark: SparkSession, root: String, df: DataFrame,
       tag: String = ""): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val want = readLatest(spark, root, mergeSchema = true).columns.toSet
+    val s = new Snapshot(spark, root)
+    val want = s.read(mergeSchema = true).columns.toSet
     val got = df.columns.toSet
     // GENERATED columns may be omitted — append computes them
-    val gen = activeGenerated(fs, rootP).map(_._1).toSet
+    val gen = activeGenerated(s.fs, s.rootP).map(_._1).toSet
     require(got == want || got == want -- gen,
       s"schema mismatch: append has ${got.toSeq.sorted.mkString(",")}," +
         s" table has ${want.toSeq.sorted.mkString(",")}")
-    append(spark, root, df, tag)
+    appendKernel(s, df, tag)
   }
 
   /** The renames in `log` with their commit versions, oldest first. */
@@ -1133,6 +1185,11 @@ object VersionedTable {
     * physical name. */
   private val CarryOps = Set("upsert", "merge", "delete", "compact",
     "optimize", "optimize-bucket", "optimize-cluster", "optimize-zorder")
+
+  /** The column-mapping commits: their manifests carry the chains every
+    * later read applies, so [[vacuum]] keeps them and a shallow clone
+    * copies them. */
+  private val MappingOps = Set("rename-column", "drop-column", "widen-column")
 
   /** Does any parquet file under `root/d` carry top-level column
     * `colName`? Driver-side footer metadata only (the stats-scraper
@@ -1483,22 +1540,23 @@ object VersionedTable {
     * (wall-clock values are not oracle-reproducible — the documented
     * reason this surface has no judged row). */
   def versionAsOf(spark: SparkSession, root: String,
-      asOf: java.time.Instant): Int = {
-    val (fs, rootP) = fsOf(spark, root)
-    requireExists(spark, root)
-    val eligible = existingVersions(fs, rootP).filter { v =>
-      fs.getFileStatus(manifestPath(rootP, v)).getModificationTime <=
-        asOf.toEpochMilli
-    }
-    require(eligible.nonEmpty,
-      s"no retained version committed at or before $asOf under $root")
-    eligible.max
+      asOf: java.time.Instant): Int =
+    versionAt(new Snapshot(spark, root), asOf)
+
+  /** [[versionAsOf]] from the snapshot's listing (the manifests' mtimes). */
+  private def versionAt(s: Snapshot, asOf: java.time.Instant): Int = {
+    s.latest // the table must exist
+    s.committedAt.filter(_._2 <= asOf.toEpochMilli).keys.lastOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"no retained version committed at or before $asOf under ${s.rootP}"))
   }
 
   /** [[readVersion]] at [[versionAsOf]]`(asOf)`. */
   def readAsOf(spark: SparkSession, root: String, asOf: java.time.Instant,
-      mergeSchema: Boolean = false): DataFrame =
-    readVersion(spark, root, versionAsOf(spark, root, asOf), mergeSchema)
+      mergeSchema: Boolean = false): DataFrame = {
+    val s = new Snapshot(spark, root)
+    s.atVersion(versionAt(s, asOf)).read(mergeSchema)
+  }
 
   /** Streaming-ingest maintenance composition (Delta auto-compaction's
     * posture): the exactly-once sink [[appendIfAbsent]] followed by an
@@ -1527,8 +1585,8 @@ object VersionedTable {
     * clock; see [[versionAsOf]]). */
   def vacuumExpiredBefore(spark: SparkSession, root: String,
       cutoff: java.time.Instant): Seq[String] = {
-    val latest = requireExists(spark, root)
-    vacuum(spark, root, latest - versionAsOf(spark, root, cutoff) + 1)
+    val s = new Snapshot(spark, root)
+    sweep(s, s.latest - versionAt(s, cutoff) + 1)
   }
 
   def readLatest(spark: SparkSession, root: String,
@@ -1579,9 +1637,9 @@ object VersionedTable {
     val s = new Snapshot(spark, root)
     require(df.filter(!coalesce(cond, lit(false))).isEmpty,
       "replaceWhere: every incoming row must satisfy the predicate")
-    rewrite(s, "replace_where")(d => !s.resolved(d).filter(cond).isEmpty) {
-      dirty => Some(dirty.fold(df)(t =>
-        t.pruned(t.rows.filter(!coalesce(cond, lit(false)))).unionByName(df)))
+    rewrite(s, "replace_where", incoming = _ => Some(df))(d =>
+        !s.resolved(d).filter(cond).isEmpty) {
+      _.map(t => t.pruned(t.rows.filter(!coalesce(cond, lit(false)))))
     }
   }
 
@@ -1598,13 +1656,9 @@ object VersionedTable {
     // cached for the op so it computes once
     val keys = updates.select(keyCols.map(col): _*).distinct()
     opScoped(Seq(keys)) {
-      rewrite(s, "upsert")(d =>
+      rewrite(s, "upsert", incoming = _ => Some(updates))(d =>
         !s.resolved(d).join(keys, keyCols, "left_semi").isEmpty) {
-        // allowMissingColumns: survivors and updates may sit on either side
-        // of a schema evolution; the union schema fills the gap with nulls
-        dirty => Some(dirty.fold(updates)(t =>
-          t.pruned(t.rows.join(keys, keyCols, "left_anti"))
-            .unionByName(updates, allowMissingColumns = true)))
+        _.map(t => t.pruned(t.rows.join(keys, keyCols, "left_anti")))
       }
     }
   }
@@ -1745,10 +1799,11 @@ object VersionedTable {
     val inserts = shaped("insert")
     opScoped(Seq(deletes, inserts)) {
       val anyDeletes = !deletes.isEmpty
-      rewrite(s, "cdc")(d => anyDeletes &&
-          !s.resolved(d).join(deletes, cols, "left_semi").isEmpty) {
-        case Some(t) => Some(t.rows.exceptAll(deletes).unionByName(inserts))
-        case None => if (inserts.isEmpty) None else Some(inserts)
+      // with no dirty directory an empty insert side writes nothing
+      rewrite(s, "cdc", incoming = dirty =>
+          if (dirty.nonEmpty || !inserts.isEmpty) Some(inserts) else None)(d =>
+          anyDeletes && !s.resolved(d).join(deletes, cols, "left_semi").isEmpty) {
+        _.map(_.rows.exceptAll(deletes))
       }
     }
   }
@@ -1757,7 +1812,7 @@ object VersionedTable {
     * log is append-only; history is never erased). */
   def rollback(spark: SparkSession, root: String, toVersion: Int): Manifest = {
     val s = new Snapshot(spark, root)
-    val target = readManifest(s.fs, s.rootP, toVersion)
+    val target = s.manifest(toVersion)
     s.commit("rollback", target.dataDirs, target.deleteDirs,
       partitionCols = target.partitionCols)
   }
@@ -1833,8 +1888,7 @@ object VersionedTable {
       "compactWhere needs a selector: where predicate and/or maxRows")
     val s = new Snapshot(spark, root)
     val small: Set[String] = maxRows.fold(Set.empty[String]) { t =>
-      s.base.dataDirs.filter(d =>
-        readStats(s.fs, s.rootP, d).fold(true)(_.rows <= t)).toSet
+      s.base.dataDirs.filter(d => s.stats(d).fold(true)(_.rows <= t)).toSet
     }
     // a small dir qualifies without a probe
     rewrite(s, "optimize",
@@ -1958,10 +2012,8 @@ object VersionedTable {
       colA: String, loA: Any, hiA: Any,
       colB: String, loB: Any, hiB: Any,
       version: Int = 0): (Seq[String], Seq[String]) = {
-    val (keptA, all) = pruneDirs(spark, root, colA, loA, hiA, version)
-    val (keptB, _) = pruneDirs(spark, root, colB, loB, hiB, version)
-    val kb = keptB.toSet
-    (keptA.filter(kb), all)
+    val s = snapshotAt(spark, root, version)
+    (prune(s, Seq((colA, loA, hiA), (colB, loB, hiB))), s.base.dataDirs)
   }
 
   /** Snapshot box read with 2-D directory skipping: scans only the
@@ -1972,26 +2024,9 @@ object VersionedTable {
   def readWhereBox(spark: SparkSession, root: String,
       colA: String, loA: Any, hiA: Any,
       colB: String, loB: Any, hiB: Any,
-      version: Int = 0, mergeSchema: Boolean = false): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = if (version > 0) version else requireExists(spark, root)
-    val m = readManifest(fs, rootP, v)
-    val (kept, all) = pruneDirsBox(spark, root, colA, loA, hiA,
-      colB, loB, hiB, v)
-    val dirs = if (kept.nonEmpty) kept else all.take(1)
-    def instantized(x: Any): Any = x match {
-      case ldt: java.time.LocalDateTime =>
-        ldt.toInstant(java.time.ZoneOffset.UTC)
-      case other => other
-    }
-    val pred =
-      col(colA) >= lit(instantized(loA)) &&
-        col(colA) <= lit(instantized(hiA)) &&
-        col(colB) >= lit(instantized(loB)) &&
-        col(colB) <= lit(instantized(hiB))
-    resolvedRead(spark, fs, rootP, m.copy(dataDirs = dirs),
-      mergeSchema = mergeSchema || m.deleteDirs.nonEmpty).filter(pred)
-  }
+      version: Int = 0, mergeSchema: Boolean = false): DataFrame =
+    skipRead(snapshotAt(spark, root, version), mergeSchema,
+      Seq((colA, loA, hiA), (colB, loB, hiB)))
 
   /** Cross-VERSION drift report — the ML-monitoring question asked at
     * the format layer: did `valueCol`'s distribution shift between two
@@ -2021,24 +2056,18 @@ object VersionedTable {
     * selective OPTIMIZE, vacuum scope checks, dir-count assertions.
     * Driver-side manifest read, no Spark job. */
   def dataDirsOf(spark: SparkSession, root: String,
-      version: Int = 0): Seq[String] = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = if (version > 0) version else requireExists(spark, root)
-    readManifest(fs, rootP, v).dataDirs
-  }
+      version: Int = 0): Seq[String] =
+    snapshotAt(spark, root, version).base.dataDirs
 
   /** Commit-log history as a DataFrame (version, op, base_version, n_dirs)
     * over the manifests still present (vacuum trims the old tail). */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    requireExists(spark, root)
-    val ms = existingVersions(fs, rootP).map(readManifest(fs, rootP, _))
+    val s = new Snapshot(spark, root)
     import spark.implicits._
     // commit_ts = manifest mtime (see versionAsOf for the caveats) —
     // appended LAST so positional consumers of the original columns hold
-    ms.map(m => (m.version, m.op, m.baseVersion, m.dataDirs.size,
-        new java.sql.Timestamp(fs.getFileStatus(
-          manifestPath(rootP, m.version)).getModificationTime)))
+    s.log.map(m => (m.version, m.op, m.baseVersion, m.dataDirs.size,
+        new java.sql.Timestamp(s.committedAt(m.version))))
       .toDF("version", "op", "base_version", "n_dirs", "commit_ts")
   }
 
@@ -2082,7 +2111,7 @@ object VersionedTable {
     * reading any data bytes. */
   def changesSince(spark: SparkSession, root: String,
       sinceVersion: Int): (DataFrame, Int) = {
-    val latest = requireExists(spark, root)
+    val latest = new Snapshot(spark, root).latest
     require(sinceVersion >= 1 && sinceVersion <= latest,
       s"cursor $sinceVersion outside committed range [1, $latest]")
     if (sinceVersion == latest)
@@ -2127,11 +2156,11 @@ object VersionedTable {
     * delivery pinned in VersionedTableSpec. */
   def streamSince(spark: SparkSession, root: String,
       sinceVersion: Int, ignoreChanges: Boolean = false): (DataFrame, Int) = {
-    val latest = requireExists(spark, root)
+    val s = new Snapshot(spark, root)
+    val latest = s.latest
     require(sinceVersion >= 1 && sinceVersion <= latest,
       s"cursor $sinceVersion outside committed range [1, $latest]")
-    val (fs, rootP) = fsOf(spark, root)
-    val ms = ((sinceVersion + 1) to latest).map(readManifest(fs, rootP, _))
+    val ms = ((sinceVersion + 1) to latest).map(s.manifest)
     if (!ignoreChanges) {
       val rewrites = ms.filterNot(m => m.op == "append" || m.op == "create")
       require(rewrites.isEmpty,
@@ -2139,15 +2168,15 @@ object VersionedTable {
           rewrites.map(m => s"v${m.version}=${m.op}").mkString(", ") +
           " — rewritten rows would re-deliver; pass ignoreChanges=true to accept")
     }
-    val baseDirs = readManifest(fs, rootP, sinceVersion).dataDirs.toSet
-    val latestM = ms.lastOption.getOrElse(readManifest(fs, rootP, latest))
+    val baseDirs = s.manifest(sinceVersion).dataDirs.toSet
+    val latestM = s.manifest(latest)
     // union schema over the LATEST snapshot so evolved appends stream
     // with their late columns (pre-evolution dirs fill them as null)
-    val snap = readDirs(spark, rootP, latestM.dataDirs, mergeSchema = true,
+    val snap = readDirs(spark, s.rootP, latestM.dataDirs, mergeSchema = true,
       latestM.partitionCols.nonEmpty).schema
     val newDirs = latestM.dataDirs.filterNot(baseDirs)
     def src(d: String): DataFrame = spark.readStream.schema(snap)
-      .parquet(dataPath(spark, rootP, d).toString)
+      .parquet(dataPath(spark, s.rootP, d).toString)
     val df =
       if (newDirs.isEmpty)
         src(latestM.dataDirs.head).filter(lit(false))
@@ -2160,19 +2189,8 @@ object VersionedTable {
   private def refsDir(root: Path): Path =
     new Path(new Path(root, LogDir), "refs")
 
-  private def tagVersions(fs: FileSystem, root: Path): Map[String, Int] = {
-    val d = refsDir(root)
-    if (!fs.exists(d)) Map.empty
-    else fs.listStatus(d).filter(_.isFile).map { st =>
-      val in = fs.open(st.getPath)
-      try {
-        val bytes = new Array[Byte](st.getLen.toInt)
-        in.readFully(bytes)
-        st.getPath.getName ->
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-      } finally in.close()
-    }.toMap
-  }
+  private def tagVersions(fs: FileSystem, root: Path): Map[String, Int] =
+    textsUnder(fs, refsDir(root)).map { case (n, t) => n -> t.trim.toInt }.toMap
 
   /** Pin a NAME to a committed version (Iceberg tags / git-tag
     * semantics): `readTag` resolves the name however far the log has
@@ -2188,15 +2206,11 @@ object VersionedTable {
       version: Int): Unit = {
     require(name.matches("[A-Za-z0-9_.-]+"),
       s"tag names must be [A-Za-z0-9_.-]+: $name")
-    val (fs, rootP) = fsOf(spark, root)
-    require(existingVersions(fs, rootP).contains(version),
+    val s = new Snapshot(spark, root)
+    require(s.versions.contains(version),
       s"cannot tag version $version: not in the log at $root")
-    val d = refsDir(rootP)
-    if (!fs.exists(d)) fs.mkdirs(d)
-    val out = fs.create(new Path(d, name), true)
-    try out.write(version.toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeText(s.fs, new Path(refsDir(s.rootP), name), version.toString,
+      overwrite = true)
   }
 
   /** Snapshot read at a tag (see [[tagVersion]]). */
@@ -2238,47 +2252,45 @@ object VersionedTable {
   private def branchManifestPath(root: Path, name: String, v: Int): Path =
     new Path(branchLog(root, name), f"$v%08d.json")
 
+  /** A branch ref's text `<fork> <head>`. */
+  private def parseRef(text: String): (Int, Int) = {
+    val parts = text.trim.split("\\s+")
+    (parts(0).toInt, parts(1).toInt)
+  }
+
   private def readBranchRef(fs: FileSystem, root: Path,
       name: String): Option[(Int, Int)] = {
     val p = new Path(headsDir(root), name)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        val parts = new String(bytes,
-          java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
-        Some((parts(0).toInt, parts(1).toInt))
-      } finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(parseRef(readText(fs, p)))
   }
 
+  /** Every branch ref, sorted by name: (name, fork, head). */
+  private def branchRefs(fs: FileSystem, root: Path): Seq[(String, Int, Int)] =
+    textsUnder(fs, headsDir(root)).map { case (n, t) =>
+      val (fork, head) = parseRef(t)
+      (n, fork, head)
+    }
+
   private def writeBranchRef(fs: FileSystem, root: Path, name: String,
-      fork: Int, head: Int): Unit = {
-    val d = headsDir(root)
-    if (!fs.exists(d)) fs.mkdirs(d)
-    val out = fs.create(new Path(d, name), true)
-    try out.write(s"$fork $head"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      fork: Int, head: Int): Unit =
+    writeText(fs, new Path(headsDir(root), name), s"$fork $head",
+      overwrite = true)
 
   /** The manifest a branch's head currently denotes: the fork-point
     * main manifest while the branch has no commits of its own, else the
     * branch's own head manifest. */
-  private def branchHeadManifest(fs: FileSystem, root: Path, name: String,
-      fork: Int, head: Int): Manifest =
-    if (head == 0) readManifest(fs, root, fork)
-    else {
-      val p = branchManifestPath(root, name, head)
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        parseManifest(new String(bytes, java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
-    }
+  private def branchHead(s: Snapshot, name: String, fork: Int,
+      head: Int): Manifest =
+    if (head == 0) s.manifest(fork)
+    else readManifest(s.fs, branchManifestPath(s.rootP, name, head))
+
+  /** Publish `m` as branch commit `m.version` and move the head to it. */
+  private def commitBranch(s: Snapshot, name: String, fork: Int,
+      m: Manifest): Manifest = {
+    publishManifest(s.fs, branchManifestPath(s.rootP, name, m.version), m)
+    writeBranchRef(s.fs, s.rootP, name, fork, m.version)
+    m
+  }
 
   private def requireBranch(fs: FileSystem, root: Path,
       name: String): (Int, Int) =
@@ -2299,13 +2311,13 @@ object VersionedTable {
       fromVersion: Int = 0): Unit = {
     require(name.matches("[A-Za-z0-9_.-]+"),
       s"branch names must be [A-Za-z0-9_.-]+: $name")
-    val (fs, rootP) = fsOf(spark, root)
-    val fork = if (fromVersion > 0) fromVersion else requireExists(spark, root)
-    require(existingVersions(fs, rootP).contains(fork),
+    val s = new Snapshot(spark, root)
+    val fork = if (fromVersion > 0) fromVersion else s.latest
+    require(s.versions.contains(fork),
       s"cannot branch at version $fork: not in the log at $root")
-    require(readBranchRef(fs, rootP, name).isEmpty,
+    require(readBranchRef(s.fs, s.rootP, name).isEmpty,
       s"branch '$name' already exists at $root")
-    writeBranchRef(fs, rootP, name, fork, 0)
+    writeBranchRef(s.fs, s.rootP, name, fork, 0)
   }
 
   /** Append-only commit to a branch: one new shared-space data
@@ -2313,34 +2325,31 @@ object VersionedTable {
     * untouched. Inherits the branch snapshot's hive layout; CHECK
     * constraints gate branch writes exactly like main writes (the
     * audit in write-AUDIT-publish starts with the table's own
-    * invariants). */
+    * invariants) and generated columns are computed as on every append:
+    * the batch stages through the append kernel's [[stageAppend]]. */
   def appendToBranch(spark: SparkSession, root: String, name: String,
       df: DataFrame): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val (fork, head) = requireBranch(fs, rootP, name)
-    val base = branchHeadManifest(fs, rootP, name, fork, head)
+    val s = new Snapshot(spark, root)
+    val (fork, head) = requireBranch(s.fs, s.rootP, name)
+    val base = branchHead(s, name, fork, head)
     val v = head + 1
     // allocation start number: past both logs' plausible claims — the
     // claim allocator resolves any collision by skipping forward
-    val dir = writeDataDir(df, rootP,
-      math.max(latestVersion(spark, root), fork) + v, base.partitionCols)
-    val m = publishManifest(fs, branchLog(rootP, name),
-      branchManifestPath(rootP, name, v),
-      Manifest(v, "append", if (head == 0) 0 else head,
-        base.dataDirs :+ dir, partitionCols = base.partitionCols,
-        deleteDirs = base.deleteDirs))
-    writeBranchRef(fs, rootP, name, fork, v)
-    m
+    val dir = stageAppend(s, df, _ => (),
+      math.max(s.lastVersion, fork) + v, base.partitionCols)
+    commitBranch(s, name, fork, Manifest(v, "append", if (head == 0) 0 else head,
+      base.dataDirs :+ dir, partitionCols = base.partitionCols,
+      deleteDirs = base.deleteDirs))
   }
 
   /** Snapshot read at a branch head (tombstone-aware, like any
     * snapshot read). */
   def readBranch(spark: SparkSession, root: String, name: String,
       mergeSchema: Boolean = false): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val (fork, head) = requireBranch(fs, rootP, name)
-    resolvedRead(spark, fs, rootP,
-      branchHeadManifest(fs, rootP, name, fork, head), mergeSchema)
+    val s = new Snapshot(spark, root)
+    val (fork, head) = requireBranch(s.fs, s.rootP, name)
+    resolvedRead(spark, s.fs, s.rootP, branchHead(s, name, fork, head),
+      mergeSchema)
   }
 
   /** Publish a branch to main, git-fast-forward semantics: REQUIRES
@@ -2354,19 +2363,18 @@ object VersionedTable {
     * commits publishes nothing (returns the main head manifest). */
   def fastForward(spark: SparkSession, root: String,
       name: String): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val (fork, head) = requireBranch(fs, rootP, name)
     val s = new Snapshot(spark, root)
+    val (fork, head) = requireBranch(s.fs, s.rootP, name)
     val mainHead = s.base.version
     if (head == 0) s.base
     else {
       require(mainHead == fork,
         s"cannot fast-forward '$name': main moved $fork -> $mainHead " +
           "since the fork; re-branch from the new head and re-apply")
-      val bm = branchHeadManifest(fs, rootP, name, fork, head)
+      val bm = branchHead(s, name, fork, head)
       val m = s.commit("fast-forward", bm.dataDirs, bm.deleteDirs,
         partitionCols = bm.partitionCols)
-      writeBranchRef(fs, rootP, name, m.version, 0)
+      writeBranchRef(s.fs, s.rootP, name, m.version, 0)
       m
     }
   }
@@ -2382,34 +2390,22 @@ object VersionedTable {
     * VersionedTableSpec (WAP-with-fix lifecycle). */
   def rollbackBranch(spark: SparkSession, root: String, name: String,
       toHead: Int): Manifest = {
-    val (fs, rootP) = fsOf(spark, root)
-    val (fork, head) = requireBranch(fs, rootP, name)
+    val s = new Snapshot(spark, root)
+    val (fork, head) = requireBranch(s.fs, s.rootP, name)
     require(toHead >= 0 && toHead < head,
       s"rollbackBranch: toHead $toHead not before head $head of '$name'")
-    val target = branchHeadManifest(fs, rootP, name, fork, toHead)
-    val v = head + 1
-    val m = publishManifest(fs, branchLog(rootP, name),
-      branchManifestPath(rootP, name, v),
-      Manifest(v, "rollback", head, target.dataDirs,
-        partitionCols = target.partitionCols,
-        deleteDirs = target.deleteDirs))
-    writeBranchRef(fs, rootP, name, fork, v)
-    m
+    val target = branchHead(s, name, fork, toHead)
+    commitBranch(s, name, fork, Manifest(head + 1, "rollback", head,
+      target.dataDirs, partitionCols = target.partitionCols,
+      deleteDirs = target.deleteDirs))
   }
 
   /** All branches as (branch, fork_version, n_commits) — n_commits is
     * the branch-local head (0 = unwritten fork). */
   def branches(spark: SparkSession, root: String): DataFrame = {
     val (fs, rootP) = fsOf(spark, root)
-    val d = headsDir(rootP)
     import spark.implicits._
-    val rows =
-      if (!fs.exists(d)) Seq.empty[(String, Int, Int)]
-      else fs.listStatus(d).filter(_.isFile).map(_.getPath.getName).toSeq
-        .sorted.flatMap { n =>
-          readBranchRef(fs, rootP, n).map { case (f, h) => (n, f, h) }
-        }
-    rows.toDF("branch", "fork_version", "n_commits")
+    branchRefs(fs, rootP).toDF("branch", "fork_version", "n_commits")
   }
 
   /** Drop a branch: ref and branch log removed; branch-only data
@@ -2431,18 +2427,8 @@ object VersionedTable {
   private def constraintsDir(root: Path): Path =
     new Path(new Path(root, LogDir), "constraints")
 
-  private def activeConstraints(fs: FileSystem, root: Path): Seq[(String, String)] = {
-    val d = constraintsDir(root)
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq.map(_.getPath).sortBy(_.getName).map { p =>
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        p.getName -> new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    }
-  }
+  private def activeConstraints(fs: FileSystem, root: Path): Seq[(String, String)] =
+    textsUnder(fs, constraintsDir(root))
 
   /** ADD CONSTRAINT, Delta semantics: the EXISTING data is validated
     * first (a constraint the current snapshot violates is rejected —
@@ -2461,17 +2447,15 @@ object VersionedTable {
   def addConstraint(spark: SparkSession, root: String, name: String,
       sqlExpr: String): Unit = {
     require(name.matches("[A-Za-z0-9_.-]+"), s"illegal constraint name: $name")
-    val (fs, rootP) = fsOf(spark, root)
-    requireExists(spark, root)
-    val existingBad = !readLatest(spark, root, mergeSchema = true)
+    val s = new Snapshot(spark, root)
+    val existingBad = !s.read(mergeSchema = true)
       .filter(!coalesce(expr(sqlExpr), lit(true))).isEmpty
     if (existingBad)
       throw new ConstraintViolationException(
         s"cannot add CHECK constraint '$name' ($sqlExpr): existing rows violate it")
-    val dst = new Path(constraintsDir(rootP), name)
-    val out = fs.create(dst, false) // exclusive: duplicate add fails
-    try out.write(sqlExpr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    // exclusive: duplicate add fails
+    writeText(s.fs, new Path(constraintsDir(s.rootP), name), sqlExpr,
+      overwrite = false)
   }
 
   /** Drop a constraint; subsequent writes are no longer gated by it.
@@ -2493,18 +2477,8 @@ object VersionedTable {
   private def generatedDir(root: Path): Path =
     new Path(new Path(root, LogDir), "generated")
 
-  private def activeGenerated(fs: FileSystem, root: Path): Seq[(String, String)] = {
-    val d = generatedDir(root)
-    if (!fs.exists(d)) Nil
-    else fs.listStatus(d).toSeq.map(_.getPath).sortBy(_.getName).map { p =>
-      val in = fs.open(p)
-      try {
-        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-        in.readFully(bytes)
-        p.getName -> new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-      } finally in.close()
-    }
-  }
+  private def activeGenerated(fs: FileSystem, root: Path): Seq[(String, String)] =
+    textsUnder(fs, generatedDir(root))
 
   /** Compute missing generated columns / validate supplied ones on the
     * append path (the enforcement scope — see [[addGeneratedColumn]]). */
@@ -2523,10 +2497,11 @@ object VersionedTable {
     }
 
   /** Declare a GENERATED column (Delta `GENERATED ALWAYS AS` at this
-    * format layer): from now on the APPEND path ([[append]] /
-    * [[appendStrict]] — which lets callers omit the column — /
-    * [[appendIfAbsent]]) computes `name` from `sqlExpr` when the
-    * incoming frame lacks it, and REJECTS a frame that supplies values
+    * format layer): from now on every append entry point (the views of
+    * the append kernel — [[append]], [[appendStrict]], which lets
+    * callers omit the column, [[appendAudited]], [[appendWithIdentity]],
+    * [[appendIfAbsent]] — and [[appendToBranch]]) computes `name` from
+    * `sqlExpr` when the incoming frame lacks it, and REJECTS a frame that supplies values
     * disagreeing with the expression (NULL-supplied rows pass, the SQL
     * CHECK convention — a pre-declaration-era rewrite carrying nulls
     * must survive). Declaring generation for an EXISTING column
@@ -2558,10 +2533,9 @@ object VersionedTable {
           s"cannot declare '$name' GENERATED ALWAYS AS ($sqlExpr): " +
             "existing rows disagree with the expression")
     } else cur.select(expr(sqlExpr)) // analysis-only schema check
-    val dst = new Path(generatedDir(s.rootP), name)
-    val out = s.fs.create(dst, false) // exclusive: duplicate declare fails
-    try out.write(sqlExpr.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    // exclusive: duplicate declare fails
+    writeText(s.fs, new Path(generatedDir(s.rootP), name), sqlExpr,
+      overwrite = false)
   }
 
   /** Retire a generated-column declaration; the column itself (and any
@@ -2844,10 +2818,8 @@ object VersionedTable {
         s"${urlEnc(name)}\t${cs.kind}\t${if (cs.hasValues) 1 else 0}" +
           s"\t${urlEnc(cs.min)}\t${urlEnc(cs.max)}" + setField
     }
-    val out = fs.create(new Path(dirP, StatsFile), false)
-    try out.write(lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeText(fs, new Path(dirP, StatsFile), lines.mkString("\n"),
+      overwrite = false)
   }
 
   /** Read a directory's stats sidecar; None (absent/unparsable) means
@@ -2857,13 +2829,7 @@ object VersionedTable {
     try {
       if (!fs.exists(p)) None
       else {
-        val in = fs.open(p)
-        val text = try {
-          val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(bytes)
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-        val lines = text.split("\n").filter(_.nonEmpty)
+        val lines = readText(fs, p).split("\n").filter(_.nonEmpty)
         val rows = lines.head.stripPrefix("rows\t").toLong
         val cols = lines.tail.map { l =>
           val f = l.split("\t", -1)
@@ -2954,14 +2920,55 @@ object VersionedTable {
     * the honest analogue of Delta's `numFilesSkipped` metrics. */
   def pruneDirs(spark: SparkSession, root: String, column: String,
       lower: Any, upper: Any, version: Int = 0): (Seq[String], Seq[String]) = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = if (version > 0) version else requireExists(spark, root)
-    val m = readManifest(fs, rootP, v)
-    val (lk, lo) = toBound(lower)
-    val (hk, hi) = toBound(upper)
-    require(lk == hk, s"bound kinds differ: $lower vs $upper")
-    (m.dataDirs.filter(d => mayContain(readStats(fs, rootP, d), column, lk, lo, hi)),
-      m.dataDirs)
+    val s = snapshotAt(spark, root, version)
+    (prune(s, Seq((column, lower, upper))), s.base.dataDirs)
+  }
+
+  /** The directories of `s` whose sidecars may hold a row inside EVERY
+    * (column, lower, upper) range. */
+  private def prune(s: Snapshot, ranges: Seq[(String, Any, Any)]): Seq[String] = {
+    val bounds = ranges.map { case (column, lower, upper) =>
+      val (lk, lo) = toBound(lower)
+      val (hk, hi) = toBound(upper)
+      require(lk == hk, s"bound kinds differ: $lower vs $upper")
+      (column, lk, lo, hi)
+    }
+    s.base.dataDirs.filter(d => bounds.forall { case (column, k, lo, hi) =>
+      mayContain(s.stats(d), column, k, lo, hi)
+    })
+  }
+
+  /** The skip-read family's one body ([[readWhereBetween]],
+    * [[readWhereBox]]): scan only the [[prune]] survivors, then filter
+    * every range within. */
+  private def skipRead(s: Snapshot, mergeSchema: Boolean,
+      ranges: Seq[(String, Any, Any)]): DataFrame = {
+    val kept = prune(s, ranges)
+    // all pruned: scan ONE directory anyway — it returns zero rows by
+    // construction and carries the snapshot schema (cheap: the filter
+    // still skips its row groups)
+    val dirs = if (kept.nonEmpty) kept else s.base.dataDirs.take(1)
+    // LocalDateTime bounds: toBound pins them to UTC micros for the
+    // prune, so the retained filter must compare the SAME instant — a
+    // raw lit(LocalDateTime) is an NTZ literal the session time zone
+    // would reinterpret, silently disagreeing with the prune in any
+    // non-UTC session. Normalized to the UTC Instant here; Instant /
+    // Timestamp bounds are instants already (session-tz-independent),
+    // and NTZ-typed COLUMNS are never pruned (poisoned at stats-write).
+    def instantized(x: Any): Any = x match {
+      case ldt: java.time.LocalDateTime =>
+        ldt.toInstant(java.time.ZoneOffset.UTC)
+      case other => other
+    }
+    val pred = ranges.flatMap { case (c, lower, upper) =>
+      Seq(col(c) >= lit(instantized(lower)), col(c) <= lit(instantized(upper)))
+    }.reduce(_ && _)
+    // mergeSchema opt-in as in readVersion: on an evolved table whose
+    // range column postdates some directories, the surviving old dirs
+    // read it as null (never matching the BETWEEN — consistent with
+    // their absent stats entry keeping them readable, not prunable)
+    resolvedRead(s.spark, s.fs, s.rootP, s.base.copy(dataDirs = dirs),
+      mergeSchema = mergeSchema || s.base.deleteDirs.nonEmpty).filter(pred)
   }
 
   /** Snapshot range read with directory-level data skipping: only
@@ -2975,36 +2982,9 @@ object VersionedTable {
     * constant number of directories however long the table lives. */
   def readWhereBetween(spark: SparkSession, root: String, column: String,
       lower: Any, upper: Any, version: Int = 0,
-      mergeSchema: Boolean = false): DataFrame = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = if (version > 0) version else requireExists(spark, root)
-    val m = readManifest(fs, rootP, v)
-    val (kept, all) = pruneDirs(spark, root, column, lower, upper, v)
-    // all pruned: scan ONE directory anyway — it returns zero rows by
-    // construction and carries the snapshot schema (cheap: the filter
-    // still skips its row groups)
-    val dirs = if (kept.nonEmpty) kept else all.take(1)
-    // LocalDateTime bounds: toBound pins them to UTC micros for the
-    // prune, so the retained filter must compare the SAME instant — a
-    // raw lit(LocalDateTime) is an NTZ literal the session time zone
-    // would reinterpret, silently disagreeing with the prune in any
-    // non-UTC session. Normalized to the UTC Instant here; Instant /
-    // Timestamp bounds are instants already (session-tz-independent),
-    // and NTZ-typed COLUMNS are never pruned (poisoned at stats-write).
-    def instantized(x: Any): Any = x match {
-      case ldt: java.time.LocalDateTime =>
-        ldt.toInstant(java.time.ZoneOffset.UTC)
-      case other => other
-    }
-    val pred = col(column) >= lit(instantized(lower)) &&
-      col(column) <= lit(instantized(upper))
-    // mergeSchema opt-in as in readVersion: on an evolved table whose
-    // range column postdates some directories, the surviving old dirs
-    // read it as null (never matching the BETWEEN — consistent with
-    // their absent stats entry keeping them readable, not prunable)
-    resolvedRead(spark, fs, rootP, m.copy(dataDirs = dirs),
-      mergeSchema = mergeSchema || m.deleteDirs.nonEmpty).filter(pred)
-  }
+      mergeSchema: Boolean = false): DataFrame =
+    skipRead(snapshotAt(spark, root, version), mergeSchema,
+      Seq((column, lower, upper)))
 
   /** Point-lookup read: [[readWhereBetween]] with a degenerate [v, v]
     * range. Where the directory sidecars carry a distinct-value set
@@ -3027,12 +3007,10 @@ object VersionedTable {
     * rewrites and compactions re-scrape their new directories. */
   def metadataCount(spark: SparkSession, root: String,
       version: Int = 0): Option[Long] = {
-    val (fs, rootP) = fsOf(spark, root)
-    val v = if (version > 0) version else requireExists(spark, root)
-    val m = readManifest(fs, rootP, v)
-    if (m.deleteDirs.nonEmpty) None
-    else m.dataDirs.foldLeft(Option(0L)) { (acc, d) =>
-      for (a <- acc; s <- readStats(fs, rootP, d)) yield a + s.rows
+    val s = snapshotAt(spark, root, version)
+    if (s.base.deleteDirs.nonEmpty) None
+    else s.base.dataDirs.foldLeft(Option(0L)) { (acc, d) =>
+      for (a <- acc; st <- s.stats(d)) yield a + st.rows
     }
   }
 
@@ -3061,11 +3039,9 @@ object VersionedTable {
   def tableStats(spark: SparkSession, root: String,
       version: Int = 0): DataFrame = {
     import spark.implicits._
-    val (fs, rootP) = fsOf(spark, root)
-    val v = if (version > 0) version else requireExists(spark, root)
-    val m = readManifest(fs, rootP, v)
-    val nDirs = m.dataDirs.size
-    val maybe = m.dataDirs.map(d => readStats(fs, rootP, d))
+    val s = snapshotAt(spark, root, version)
+    val nDirs = s.base.dataDirs.size
+    val maybe = s.base.dataDirs.map(s.stats)
     val complete = maybe.forall(_.isDefined)
     val have = maybe.flatten
     val nRows = if (complete) have.map(_.rows).sum else -1L
@@ -3101,18 +3077,6 @@ object VersionedTable {
       .withColumn("n_dirs", lit(nDirs))
   }
 
-  /** Reference-counting vacuum: drop manifests older than the newest
-    * `keepVersions`, then delete every `d-*` directory no RETAINED
-    * manifest references. Time travel remains exact for the retained
-    * window; returns the reclaimed directory names.
-    *
-    * MAINTENANCE-WINDOW CONTRACT: run with no in-flight writers. A
-    * writer between claim and commit holds a directory no manifest
-    * references yet — indistinguishable from a crash orphan, so this
-    * sweep would reclaim it (the same tradeoff Delta resolves with a
-    * retention-hours threshold; a version-count format has no wall
-    * clock to threshold on, and a nightly vacuum in the compaction
-    * window is the deployment shape anyway). */
   /** Deep CLONE — materialize one snapshot of `srcRoot` as a brand-new
     * independent table at `dstRoot` (Delta's `CREATE TABLE ... DEEP
     * CLONE`, optionally `VERSION AS OF`): every data AND tombstone
@@ -3172,20 +3136,19 @@ object VersionedTable {
         // tombstones burned in) — the compact economics, paid once
         Seq(writeDataDir(src.read(mergeSchema = true), dstP, 1,
           m.partitionCols))
-    activeConstraints(sfs, srcP).foreach { case (name, e) =>
-      val out = dfs.create(new Path(constraintsDir(dstP), name), false)
-      try out.write(e.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    activeGenerated(sfs, srcP).foreach { case (name, e) =>
-      val out = dfs.create(new Path(generatedDir(dstP), name), false)
-      try out.write(e.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
+    copyDeclarations(sfs, srcP, dfs, dstP)
     commit(dfs, dstP, Manifest(1, "clone", 0, dirs,
       tag = s"clone-v$v", partitionCols = m.partitionCols,
       deleteDirs = if (mapped) Nil else m.deleteDirs))
   }
+
+  /** Copy the CHECK constraints and generated-column declarations of the
+    * table at `srcP` to the new table at `dstP` (exclusive creates). */
+  private def copyDeclarations(sfs: FileSystem, srcP: Path,
+      dfs: FileSystem, dstP: Path): Unit =
+    for (dir <- Seq[Path => Path](constraintsDir, generatedDir);
+        (name, e) <- textsUnder(sfs, dir(srcP)))
+      writeText(dfs, new Path(dir(dstP), name), e, overwrite = false)
 
   /** Donor-side shallow-clone pins: `_log/clones/<name>` files, each
     * listing the clone root and the borrowed directory names. */
@@ -3243,32 +3206,15 @@ object VersionedTable {
     val src = new Snapshot(spark, srcRoot, asOfVersion)
     val (m, v) = (src.base, src.base.version)
     val donorDirs = (m.dataDirs ++ m.deleteDirs).distinct
-    val utf8 = java.nio.charset.StandardCharsets.UTF_8
     // donor marker first: every read of the clone resolves through it
-    dfs.mkdirs(new Path(dstP, LogDir))
-    val out = dfs.create(donorFile(dstP), false)
-    try out.write((srcP.toString +: donorDirs).mkString("\n").getBytes(utf8))
-    finally out.close()
+    writeText(dfs, donorFile(dstP), (srcP.toString +: donorDirs).mkString("\n"),
+      overwrite = false)
     // donor-side pin BEFORE the head commit: a crash in between leaves
     // a stale pin (releasable via detachClone), never a corrupt clone
-    sfs.mkdirs(clonesDir(srcP))
-    val pout = sfs.create(
-      new Path(clonesDir(srcP), clonePinName(dstP)), false)
-    try pout.write((dstP.toString +: donorDirs).mkString("\n")
-      .getBytes(utf8))
-    finally pout.close()
-    src.log
-      .filter(x => x.op == "rename-column" || x.op == "drop-column" ||
-        x.op == "widen-column")
-      .foreach(x => commit(dfs, dstP, x))
-    activeConstraints(sfs, srcP).foreach { case (name, e) =>
-      val cout = dfs.create(new Path(constraintsDir(dstP), name), false)
-      try cout.write(e.getBytes(utf8)) finally cout.close()
-    }
-    activeGenerated(sfs, srcP).foreach { case (name, e) =>
-      val gout = dfs.create(new Path(generatedDir(dstP), name), false)
-      try gout.write(e.getBytes(utf8)) finally gout.close()
-    }
+    writeText(sfs, new Path(clonesDir(srcP), clonePinName(dstP)),
+      (dstP.toString +: donorDirs).mkString("\n"), overwrite = false)
+    src.log.filter(x => MappingOps(x.op)).foreach(x => commit(dfs, dstP, x))
+    copyDeclarations(sfs, srcP, dfs, dstP)
     // head at v+1: strictly above every copied mapping manifest AND
     // every borrowed directory number, so the clone's own dirs
     // (numbered by version) never collide with donor names
@@ -3285,18 +3231,36 @@ object VersionedTable {
       dstRoot: String): Boolean = {
     val (sfs, srcP) = fsOf(spark, srcRoot)
     val pin = new Path(clonesDir(srcP), clonePinName(new Path(dstRoot)))
-    fsOf(spark, srcRoot)._1.exists(pin) && sfs.delete(pin, false)
+    sfs.exists(pin) && sfs.delete(pin, false)
   }
 
+  /** Reference-counting vacuum: drop manifests older than the newest
+    * `keepVersions`, then delete every `d-*` directory no RETAINED
+    * manifest references. Time travel remains exact for the retained
+    * window; returns the reclaimed directory names.
+    *
+    * MAINTENANCE-WINDOW CONTRACT: run with no in-flight writers. A
+    * writer between claim and commit holds a directory no manifest
+    * references yet — indistinguishable from a crash orphan, so this
+    * sweep would reclaim it (the same tradeoff Delta resolves with a
+    * retention-hours threshold; a version-count format has no wall
+    * clock to threshold on, and a nightly vacuum in the compaction
+    * window is the deployment shape anyway). */
   def vacuum(spark: SparkSession, root: String, keepVersions: Int): Seq[String] = {
     require(keepVersions >= 1, "must retain at least the latest version")
-    val (fs, rootP) = fsOf(spark, root)
-    val latest = requireExists(spark, root)
+    sweep(new Snapshot(spark, root), keepVersions)
+  }
+
+  /** [[vacuum]] on the operation's snapshot (which [[vacuumExpiredBefore]]
+    * also dates its cutoff from): every manifest is read once. */
+  private def sweep(s: Snapshot, keepVersions: Int): Seq[String] = {
+    val (fs, rootP) = (s.fs, s.rootP)
+    val latest = s.latest
     val keepFrom = math.max(1, latest - keepVersions + 1)
     // intersect with what still exists: a prior vacuum with a TIGHTER
     // retention may already have trimmed into this window, and a
     // re-widened keepVersions must not try to read those manifests back
-    val have = existingVersions(fs, rootP).toSet
+    val have = s.versions.toSet
     // TAGGED versions are pinned outside the retention window (the
     // Iceberg tag-retention rule): their manifests and directories
     // survive until the tag is dropped
@@ -3305,54 +3269,33 @@ object VersionedTable {
     // version (its time-travel base) and every directory its head
     // manifest references — a branch must survive any mainline sweep
     // until it is dropped or fast-forwarded
-    val branchRefs = {
-      val d = headsDir(rootP)
-      if (!fs.exists(d)) Seq.empty[(String, Int, Int)]
-      else fs.listStatus(d).filter(_.isFile).map(_.getPath.getName).toSeq
-        .flatMap(n => readBranchRef(fs, rootP, n).map { case (f, h) => (n, f, h) })
-    }
-    val pinned = tagged ++ branchRefs.map(_._2)
-    // column-mapping MANIFESTS (rename AND drop commits) survive too —
-    // they carry the mapping chain every post-mapping read applies
+    val branches = branchRefs(fs, rootP)
+    val pinned = tagged ++ branches.map(_._2)
+    // column-mapping MANIFESTS (rename, drop and widen commits) survive
+    // too — they carry the mapping chain every post-mapping read applies
     // (renameColumn / dropColumn: a drop manifest also freezes the
     // directory era set its masking needs) — but unlike tag pins they
     // do NOT pin their data directories: the mapping outlives the
     // snapshot it was committed against (time travel TO a vacuumed
     // mapping version is gone, its mapping is not)
-    val renames = have.toSeq.sorted
-      .filter { v =>
-        val op = readManifest(fs, rootP, v).op
-        op == "rename-column" || op == "drop-column" ||
-          op == "widen-column"
-      }.toSet
-    val branchDirs = branchRefs.flatMap { case (n, f, h) =>
-      val m = branchHeadManifest(fs, rootP, n, f, h)
+    val mappings = s.log.filter(m => MappingOps(m.op)).map(_.version).toSet
+    val branchDirs = branches.flatMap { case (n, f, h) =>
+      val m = branchHead(s, n, f, h)
       m.dataDirs ++ m.deleteDirs
     }.toSet
     // SHALLOW-CLONE pins: directories a clone borrowed stay alive until
     // the pin is released (detachClone) — the explicit reference Delta's
     // shallow clones lack (there, vacuuming the source corrupts them)
-    val clonePinned = {
-      val d = clonesDir(rootP)
-      if (!fs.exists(d)) Set.empty[String]
-      else fs.listStatus(d).filter(_.isFile).toSeq.flatMap { st =>
-        val in = fs.open(st.getPath)
-        try {
-          val bytes = new Array[Byte](st.getLen.toInt)
-          in.readFully(bytes)
-          new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
-            .split("\n").drop(1).filter(_.nonEmpty).toSeq
-        } finally in.close()
-      }.toSet
-    }
+    val clonePinned = textsUnder(fs, clonesDir(rootP))
+      .flatMap(_._2.split("\n").drop(1).filter(_.nonEmpty)).toSet
     val referenced = clonePinned ++ branchDirs ++
       ((keepFrom to latest) ++ pinned).distinct.filter(have)
       .flatMap { v =>
-        val m = readManifest(fs, rootP, v)
+        val m = s.manifest(v)
         m.dataDirs ++ m.deleteDirs // tombstones are referenced dirs too
       }.toSet
     (1 until keepFrom).filter(have).filterNot(v =>
-        pinned(v) || renames(v))
+        pinned(v) || mappings(v))
       .foreach(v => fs.delete(manifestPath(rootP, v), false))
     val dead = fs.listStatus(rootP).map(_.getPath.getName)
       .filter(n => n.matches("d-\\d{8}") && !referenced.contains(n)).toSeq.sorted
@@ -3360,7 +3303,7 @@ object VersionedTable {
     // manifest tmps orphaned by a crash between write and rename:
     // dot-prefixed, invisible to readers, safe to sweep under the
     // no-in-flight-writers contract
-    fs.listStatus(new Path(rootP, LogDir)).map(_.getPath)
+    s.entries.map(_.getPath)
       .filter(_.getName.matches("\\..*\\.json\\.tmp"))
       .foreach(fs.delete(_, false))
     dead

@@ -1,0 +1,48 @@
+package graft
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path,
+  RawLocalFileSystem}
+
+/** The local filesystem under its own scheme, recording the path of every
+  * `listStatus` and `open`, so a spec can count the metadata reads one
+  * operation makes. Spark's parquet reads and writes run through it
+  * unchanged. Top-level with a no-arg constructor: Hadoop instantiates
+  * it by reflection (an inner or REPL class would fail that). */
+class CountingFileSystem extends RawLocalFileSystem {
+  override def getUri: java.net.URI =
+    java.net.URI.create(s"${CountingFileSystem.Scheme}:///")
+  override def getScheme: String = CountingFileSystem.Scheme
+
+  override def listStatus(f: Path): Array[FileStatus] = {
+    CountingFileSystem.listed.add(f.toUri.getPath)
+    super.listStatus(f)
+  }
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CountingFileSystem.opened.add(f.toUri.getPath)
+    super.open(f, bufferSize)
+  }
+}
+
+object CountingFileSystem {
+  val Scheme = "countfs"
+
+  /** Paths listed and opened, in call order, across every instance (the
+    * scheme is registered uncached, so each lookup is a new instance). */
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val opened = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  def register(conf: Configuration): Unit = {
+    conf.set(s"fs.$Scheme.impl", classOf[CountingFileSystem].getName)
+    conf.setBoolean(s"fs.$Scheme.impl.disable.cache", true)
+  }
+
+  /** The paths `body` listed and opened. */
+  def during[T](body: => T): (T, Seq[String], Seq[String]) = {
+    import scala.jdk.CollectionConverters._
+    val (l0, o0) = (listed.size, opened.size)
+    val r = body
+    (r, listed.asScala.toSeq.drop(l0), opened.asScala.toSeq.drop(o0))
+  }
+}

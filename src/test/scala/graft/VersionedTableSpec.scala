@@ -2379,4 +2379,121 @@ class VersionedTableSpec extends SparkTestBase {
     src.unpersist()
     graft.engine.Caches.releaseAll()
   }
+
+  test("replaceWhere after drop + re-add: survivors and batch union by name") {
+    import spark.implicits._
+    val root = freshRoot("replace_where_readd")
+    VersionedTable.create(spark, root,
+      Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("k", "v", "note"))
+    VersionedTable.dropColumn(spark, root, "note")
+    // the re-add: an append carrying the dropped name again
+    VersionedTable.append(spark, root,
+      Seq((3L, 30L, "c"), (4L, 40L, "d")).toDF("k", "v", "note"))
+    // k = 1 sits in the pre-drop directory, whose survivors are pruned
+    // to (k, v); the batch carries note
+    VersionedTable.replaceWhere(spark, root,
+      Seq((1L, 11L, "a2")).toDF("k", "v", "note"), col("k") === 1L)
+    // k = 3 sits in the re-add directory, whose survivors carry note;
+    // the batch does not
+    VersionedTable.replaceWhere(spark, root,
+      Seq((3L, 33L)).toDF("k", "v"), col("k") === 3L)
+    val model = Seq((1L, 11L, Some("a2")), (2L, 20L, None),
+      (3L, 33L, None), (4L, 40L, Some("d")))
+    val got = VersionedTable.readLatest(spark, root, mergeSchema = true)
+      .select("k", "v", "note").orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)))).toSeq
+    assert(got === model)
+  }
+
+  test("generated columns are computed on every append entry point") {
+    import spark.implicits._
+    val root = freshRoot("gen_every_append")
+    VersionedTable.createWithIdentity(spark, root,
+      Seq((1L, 5L)).toDF("k", "v"), "rid", "k")
+    VersionedTable.addGeneratedColumn(spark, root, "dbl", "v * 2")
+    VersionedTable.appendAudited(spark, root, Seq((2L, 6L)).toDF("k", "v"),
+      rowRules = Seq("v_positive" -> (col("v") > 0)))
+    VersionedTable.appendWithIdentity(spark, root,
+      Seq((3L, 7L)).toDF("k", "v"), "rid", "k")
+    VersionedTable.createBranch(spark, root, "b")
+    VersionedTable.appendToBranch(spark, root, "b",
+      Seq((4L, 8L)).toDF("k", "v"))
+    def dbl(df: org.apache.spark.sql.DataFrame): Seq[(Long, Option[Long])] =
+      df.select(col("k"), col("dbl").cast("long")).orderBy("k").collect()
+        .map(r => (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1))))
+        .toSeq
+    // k = 1 predates the declaration
+    val main = Seq(1L -> None, 2L -> Some(12L), 3L -> Some(14L))
+    assert(dbl(VersionedTable.readLatest(spark, root, mergeSchema = true)) ===
+      main)
+    assert(dbl(VersionedTable.readBranch(spark, root, "b",
+      mergeSchema = true)) === main :+ (4L -> Some(16L)))
+  }
+
+  test("every entry point lists _log at most once and reads a manifest once") {
+    import spark.implicits._
+    CountingFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val local = new org.apache.hadoop.fs.Path(freshRoot("counted")).toUri.getPath
+    val root = s"${CountingFileSystem.Scheme}://$local"
+    val logDir = s"$local/_log"
+    val manifest = (java.util.regex.Pattern.quote(logDir) + "/\\d{8}\\.json").r
+    VersionedTable.create(spark, root, Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    VersionedTable.append(spark, root, Seq((3L, 30L)).toDF("k", "v"), "batch-1")
+    VersionedTable.append(spark, root, Seq((4L, 40L)).toDF("k", "v"))
+    VersionedTable.append(spark, root, Seq((5L, 50L)).toDF("k", "v"))
+    // (op, _log listings, manifests opened more than once) of each op
+    // breaking the rule
+    val broken = Seq.newBuilder[(String, Int, Map[String, Int])]
+    def counted(op: String, readsOnce: Boolean)(body: => Any): Unit = {
+      val (_, listed, opened) = CountingFileSystem.during(body)
+      val listings = listed.count(_ == logDir)
+      val twice = if (!readsOnce) Map.empty[String, Int]
+        else opened.filter(manifest.matches).groupBy(identity)
+          .collect { case (p, n) if n.size > 1 => p.stripPrefix(local) -> n.size }
+      if (listings > 1 || twice.nonEmpty) broken += ((op, listings, twice))
+    }
+    val now = java.time.Instant.now()
+    counted("history", readsOnce = true)(
+      VersionedTable.history(spark, root).collect())
+    counted("versionAsOf", readsOnce = true)(
+      VersionedTable.versionAsOf(spark, root, now))
+    counted("readAsOf", readsOnce = false)(
+      VersionedTable.readAsOf(spark, root, now).collect())
+    counted("appendIfAbsent (tag hit)", readsOnce = true)(
+      VersionedTable.appendIfAbsent(spark, root,
+        Seq((3L, 30L)).toDF("k", "v"), "batch-1"))
+    counted("dataDirsOf", readsOnce = false)(
+      VersionedTable.dataDirsOf(spark, root))
+    counted("pruneDirs", readsOnce = false)(
+      VersionedTable.pruneDirs(spark, root, "k", 2L, 3L))
+    counted("pruneDirsBox", readsOnce = false)(
+      VersionedTable.pruneDirsBox(spark, root, "k", 2L, 3L, "v", 0L, 99L))
+    counted("readWhereBetween", readsOnce = true)(
+      VersionedTable.readWhereBetween(spark, root, "k", 2L, 3L).collect())
+    counted("readWhereBox", readsOnce = true)(
+      VersionedTable.readWhereBox(spark, root, "k", 2L, 3L, "v", 0L, 99L)
+        .collect())
+    counted("metadataCount", readsOnce = true)(
+      VersionedTable.metadataCount(spark, root))
+    counted("tableStats", readsOnce = false)(
+      VersionedTable.tableStats(spark, root).collect())
+    counted("tagVersion", readsOnce = false)(
+      VersionedTable.tagVersion(spark, root, "t2", 2))
+    counted("createBranch", readsOnce = false)(
+      VersionedTable.createBranch(spark, root, "b"))
+    counted("append", readsOnce = false)(
+      VersionedTable.append(spark, root, Seq((6L, 60L)).toDF("k", "v")))
+    counted("upsert", readsOnce = false)(
+      VersionedTable.upsert(spark, root, Seq((6L, 61L)).toDF("k", "v"), Seq("k")))
+    counted("deleteWhere", readsOnce = false)(
+      VersionedTable.deleteWhere(spark, root, col("k") === 1L))
+    counted("vacuum", readsOnce = true)(
+      VersionedTable.vacuum(spark, root, keepVersions = 2))
+    counted("vacuumExpiredBefore", readsOnce = false)(
+      VersionedTable.vacuumExpiredBefore(spark, root, java.time.Instant.now()))
+    assert(broken.result().isEmpty)
+    assert(VersionedTable.readLatest(spark, root).orderBy("k").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
+      Seq((2L, 20L), (3L, 30L), (4L, 40L), (5L, 50L), (6L, 61L)))
+  }
 }
