@@ -30,9 +30,19 @@ object Tables {
     * parquet TIMESTAMP(NANOS), which Spark's reader rejects
     * ([PARQUET_TYPE_ILLEGAL]); reading nanos as long lets [[apply]]
     * truncate to microsecond timestamps — the same truncation DuckDB
-    * applies, keeping the oracle comparable. */
+    * applies, keeping the oracle comparable.
+    *
+    * It also makes [[LocalFs]] the `file` scheme (both `fs.file.impl` and
+    * the FileContext key `fs.AbstractFileSystem.file.impl`, on the
+    * context's Hadoop conf and the session conf, and swaps the `file`
+    * FileSystem session start cached): without Hadoop's native library
+    * the stock local filesystem forks a `chmod` per file created and per
+    * directory made and a `readlink` per rename side, about 4 ms each.
+    * Like the other settings here, a key the SparkConf names is left
+    * alone. */
   def bootstrap(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    LocalFs.install(spark)
     // Catalyst constraint propagation is a pure PLANNING feature (infers
     // IsNotNull/derived filters; results are identical either way) whose
     // cost lands on every optimization pass. Measured r19 (interleaved

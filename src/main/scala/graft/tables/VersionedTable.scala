@@ -1198,9 +1198,7 @@ object VersionedTable {
       colName: String): Boolean = {
     import scala.jdk.CollectionConverters._
     parquetFiles(fs, dataPath(fs, root, d)).exists { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(f, fs.getConf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val reader = openFooter(fs, f)
       try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
         .exists(_.getName == colName)
       finally reader.close()
@@ -2043,9 +2041,10 @@ object VersionedTable {
     * shifted-append attribution pinned in VersionedTableSpec. */
   def versionDrift(spark: SparkSession, root: String, valueCol: String,
       fromVersion: Int, toVersion: Int, nBins: Int = 10): DataFrame = {
-    val a = readVersion(spark, root, fromVersion, mergeSchema = true)
+    val s = new Snapshot(spark, root)
+    val a = s.atVersion(fromVersion).read(mergeSchema = true)
       .select(col(valueCol).as("__v")).withColumn("__ver", lit("from"))
-    val b = readVersion(spark, root, toVersion, mergeSchema = true)
+    val b = s.atVersion(toVersion).read(mergeSchema = true)
       .select(col(valueCol).as("__v")).withColumn("__ver", lit("to"))
     graft.operators.Events.psiBins(
       a.unionByName(b), "__ver", "__v", "from", "to", nBins)
@@ -2084,9 +2083,14 @@ object VersionedTable {
     * as null there — so evolving a column surfaces as delete+insert for
     * rows whose value changed, and as NOTHING for null-to-null rows). */
   def changes(spark: SparkSession, root: String, fromVersion: Int,
+      toVersion: Int): DataFrame =
+    changesOn(new Snapshot(spark, root), fromVersion, toVersion)
+
+  /** [[changes]] with both sides read from the operation's snapshot `s`. */
+  private def changesOn(s: Snapshot, fromVersion: Int,
       toVersion: Int): DataFrame = {
-    val from = readVersion(spark, root, fromVersion, mergeSchema = true)
-    val to = readVersion(spark, root, toVersion, mergeSchema = true)
+    val from = s.atVersion(fromVersion).read(mergeSchema = true)
+    val to = s.atVersion(toVersion).read(mergeSchema = true)
     val union = from.schema.fields ++
       to.schema.fields.filterNot(f => from.schema.fieldNames.contains(f.name))
     require(!union.exists(_.name == "_change"),
@@ -2111,7 +2115,8 @@ object VersionedTable {
     * reading any data bytes. */
   def changesSince(spark: SparkSession, root: String,
       sinceVersion: Int): (DataFrame, Int) = {
-    val latest = new Snapshot(spark, root).latest
+    val s = new Snapshot(spark, root)
+    val latest = s.latest
     require(sinceVersion >= 1 && sinceVersion <= latest,
       s"cursor $sinceVersion outside committed range [1, $latest]")
     if (sinceVersion == latest)
@@ -2120,9 +2125,9 @@ object VersionedTable {
       // can omit evolved columns, and applyChanges on that frame would
       // then fail selecting the replica's union schema instead of
       // committing the documented no-op sync version
-      (readVersion(spark, root, latest, mergeSchema = true).limit(0)
+      (s.atVersion(latest).read(mergeSchema = true).limit(0)
         .withColumn("_change", lit("")), latest)
-    else (changes(spark, root, sinceVersion, latest), latest)
+    else (changesOn(s, sinceVersion, latest), latest)
   }
 
   /** STREAMING read of the commits after `sinceVersion` — the consumer
@@ -2667,11 +2672,19 @@ object VersionedTable {
     }
   }
 
+  /** A parquet reader over `file` whose read options come from `fs`'s
+    * conf: `ParquetFileReader.open(InputFile)` alone builds a fresh Hadoop
+    * `Configuration` per file, which parses `core-default.xml` again. */
+  private def openFooter(fs: FileSystem,
+      file: Path): org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, fs.getConf),
+      org.apache.parquet.HadoopReadOptions.builder(fs.getConf).build())
+
   private def writeStats(fs: FileSystem, dirP: Path): Unit = {
     import scala.jdk.CollectionConverters._
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     import org.apache.parquet.schema.LogicalTypeAnnotation
-    val conf = fs.getConf
     var rows = 0L
     // None = poisoned (seen, but not prunable); LinkedHashMap keeps
     // footer column order in the sidecar for readability
@@ -2714,8 +2727,7 @@ object VersionedTable {
       case _ => () // existing range or poison stands
     }
     for (file <- parquetFiles(fs, dirP)) {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      val reader = openFooter(fs, file)
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
         for (block <- reader.getFooter.getBlocks.asScala) {

@@ -1,15 +1,16 @@
 package graft
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path,
-  RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path}
 
 /** The local filesystem under its own scheme, recording the path of every
   * `listStatus` and `open`, so a spec can count the metadata reads one
   * operation makes. Spark's parquet reads and writes run through it
-  * unchanged. Top-level with a no-arg constructor: Hadoop instantiates
-  * it by reflection (an inner or REPL class would fail that). */
-class CountingFileSystem extends RawLocalFileSystem {
+  * unchanged. It is the engine's fork-free raw class, so counted ops set
+  * modes and resolve renames as the `file` scheme does. Top-level with a
+  * no-arg constructor: Hadoop instantiates it by reflection (an inner or
+  * REPL class would fail that). */
+class CountingFileSystem extends graft.engine.LocalFs {
   override def getUri: java.net.URI =
     java.net.URI.create(s"${CountingFileSystem.Scheme}:///")
   override def getScheme: String = CountingFileSystem.Scheme

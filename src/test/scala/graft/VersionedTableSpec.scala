@@ -2496,4 +2496,36 @@ class VersionedTableSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
       Seq((2L, 20L), (3L, 30L), (4L, 40L), (5L, 50L), (6L, 61L)))
   }
+
+  test("changes, changesSince and versionDrift list _log once and read a manifest once") {
+    import spark.implicits._
+    CountingFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val local = new org.apache.hadoop.fs.Path(freshRoot("counted_cdf")).toUri.getPath
+    val root = s"${CountingFileSystem.Scheme}://$local"
+    val logDir = s"$local/_log"
+    val manifest = (java.util.regex.Pattern.quote(logDir) + "/\\d{8}\\.json").r
+    VersionedTable.create(spark, root, Seq((1L, 10L), (2L, 20L)).toDF("k", "v"))
+    VersionedTable.renameColumn(spark, root, "v", "w")
+    VersionedTable.append(spark, root, Seq((3L, 30L)).toDF("k", "w"))
+    VersionedTable.upsert(spark, root, Seq((1L, 11L)).toDF("k", "w"), Seq("k"))
+    // op -> (_log listings, manifests opened more than once)
+    def counted(body: => Any): (Int, Map[String, Int]) = {
+      val (_, listed, opened) = CountingFileSystem.during(body)
+      (listed.count(_ == logDir), opened.filter(manifest.matches).groupBy(identity)
+        .collect { case (p, n) if n.size > 1 => p.stripPrefix(local) -> n.size })
+    }
+    val reads = Map(
+      "changes" -> counted(VersionedTable.changes(spark, root, 1, 4).collect()),
+      "changesSince" -> counted(VersionedTable.changesSince(spark, root, 2)._1.collect()),
+      "changesSince (caught up)" ->
+        counted(VersionedTable.changesSince(spark, root, 4)._1.collect()),
+      "versionDrift" -> counted(
+        VersionedTable.versionDrift(spark, root, "w", 2, 4, nBins = 2).collect()))
+    assert(reads.filter { case (_, (n, twice)) => n > 1 || twice.nonEmpty }.isEmpty,
+      reads)
+    val (delta, cursor) = VersionedTable.changesSince(spark, root, 2)
+    assert(cursor === 4)
+    assert(delta.select("k", "w", "_change").as[(Long, Long, String)].collect().toSet ===
+      Set((1L, 10L, "delete"), (1L, 11L, "insert"), (3L, 30L, "insert")))
+  }
 }
