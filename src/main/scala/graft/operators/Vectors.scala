@@ -7,10 +7,13 @@ import org.apache.spark.sql.functions._
 /** Vector similarity search over embedding columns (SURVEY.md §2b row 3;
   * `embeddings.parquet`: vec_id, embedding array<float>, label).
   *
-  * Two paths, per the north star: brute-force cosine top-k as the exact
-  * baseline (oracle-checkable), and hyperplane-LSH bucketed search as the
-  * scale path (candidates from shared buckets only — probabilistic
-  * recall, judged rows-only).
+  * Every top-k path is two parts: a candidate generator (broadcast scan,
+  * IVF cells, PQ/IVF-PQ codes, SQ8 codes, BQ codes or SimHash buckets)
+  * and the shared ranking kernels. An exact path ends in [[rankTopK]];
+  * a quantized path ends in [[shortlistRerank]], which re-ranks its
+  * approximate shortlist by exact cosine. Brute force is the exact,
+  * oracle-checkable baseline; the approximate paths have probabilistic
+  * recall and are judged rows-only or by recall contract.
   *
   * All arithmetic is double (`array<float>` widened at the scan) so the
   * result is comparable with DuckDB's `list_cosine_similarity` on
@@ -18,6 +21,14 @@ import org.apache.spark.sql.functions._
   * column expressions — no UDFs, vectors never leave Tungsten rows.
   */
 object Vectors {
+
+  /** Lloyd rounds of every trained quantizer: [[ivfTopK]]'s cells,
+    * [[pqTopK]]'s codebooks and both of [[ivfPqTopK]]'s. */
+  private val LloydIters = 2
+
+  /** A quantized path's approximate shortlist keeps `k · ShortlistFactor`
+    * candidates per query for [[shortlistRerank]]'s exact stage. */
+  private val ShortlistFactor = 10
 
   /** Dot product of two array<double> columns — the native codegen
     * expression (graft.functions.DotProduct), registered as `graft_dot`
@@ -36,6 +47,124 @@ object Vectors {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
 
+  // ---- the shared top-k kernels ------------------------------------------
+
+  /** The ranking step every top-k path ends in: per `qid`, rows ordered
+    * by `score` (descending unless `ascending`), ties by `neighbor`,
+    * numbered into `rankCol` and cut at `k`. Spark plans the cut as a
+    * WindowGroupLimit, a bounded top-k heap per partition ahead of the
+    * sort, so only k rows per query reach the shuffle's sort (PlanSpec
+    * pins it for every path). */
+  private def rankTopK(pairs: DataFrame, score: String, ascending: Boolean,
+      k: Int, rankCol: String = "rank"): DataFrame = {
+    val order = if (ascending) col(score).asc else col(score).desc
+    pairs
+      .withColumn(rankCol, row_number().over(
+        Window.partitionBy(col("qid")).orderBy(order, col("neighbor"))))
+      .filter(col(rankCol) <= k)
+  }
+
+  /** (qid, neighbor, sim) of candidate rows carrying both sides' ids and
+    * vectors: the exact cosine every unquantized path ranks. */
+  private def cosinePairs(cands: DataFrame, idCol: String, vecCol: String,
+      qidCol: String, qvecCol: String): DataFrame =
+    cands.select(col(qidCol).as("qid"), col(idCol).as("neighbor"),
+      cosine(col(qvecCol), col(vecCol)).as("sim"))
+
+  /** The exact stage of every quantized path. `approx` is (qid, __qv,
+    * neighbor, `scoreCol`): each query's best `k · ShortlistFactor` rows
+    * by the approximate score form the shortlist, the true vectors are
+    * joined back from `cached` for those rows only, and the exact cosine
+    * alone decides the order (which also absorbs an approximate score's
+    * bias, e.g. ADC's dot-vs-cosine on non-unit corpora). */
+  private def shortlistRerank(approx: DataFrame, scoreCol: String,
+      ascending: Boolean, cached: DataFrame, idCol: String, vecCol: String,
+      k: Int): DataFrame = {
+    val shortlist = rankTopK(approx, scoreCol, ascending,
+        k * ShortlistFactor, "__r")
+      .select(col("qid"), col("__qv"), col("neighbor"))
+    rankTopK(shortlist
+      .join(cached.select(col(idCol).as("neighbor"), col(vecCol).as("__v")),
+        "neighbor")
+      .select(col("qid"), col("neighbor"),
+        cosine(col("__qv"), col("__v")).as("sim")),
+      "sim", ascending = false, k)
+  }
+
+  /** The `n` vectors lowest in xxhash64(id) order: the deterministic
+    * seed rows every trained quantizer starts from (one TakeOrdered job,
+    * a config-scale read). */
+  private def hashSeeds(df: DataFrame, idCol: String, vecCol: String,
+      n: Int): Seq[Seq[Double]] =
+    df.select(col(vecCol)).orderBy(xxhash64(col(idCol))).limit(n)
+      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+
+  /** One Lloyd round (Lloyd 1982): the new centroid of each `__cell` of
+    * `assigned` is the mean of its rows' `vec`. ONE (cell, position) →
+    * mean aggregate: partial aggregation compresses each task to
+    * ≤ cells × dim rows, so the shuffle and the collect are a few KB of
+    * centroid state, never a data collect. A cell no row landed in
+    * keeps its old centroid. */
+  private def lloydRound(assigned: DataFrame, vec: Column,
+      cents: Seq[Seq[Double]]): Seq[Seq[Double]] = {
+    val byCell = assigned.select(col("__cell"), posexplode(vec))
+      .groupBy(col("__cell"), col("pos")).agg(avg(col("col")).as("m"))
+      .collect().groupBy(_.getInt(0))
+    cents.zipWithIndex.map { case (old, cell) =>
+      byCell.get(cell).fold(old)(rows =>
+        rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq)
+    }
+  }
+
+  /** One Lloyd round over all PQ codebooks at once. `parts` is (m, c,
+    * pos, `x`): subspace, code, position in the sub-vector and the value
+    * to average. ONE (m, c, pos) → mean job per round covers every
+    * subspace (per-task partials ≤ subspaces × codebookSize × ds rows),
+    * instead of one full-corpus job per subspace whose scheduling
+    * overhead dominated at small SF. A code no row took keeps its old
+    * centroid. */
+  private def codebookRound(parts: DataFrame, x: String,
+      books: Array[Array[Seq[Double]]]): Array[Array[Seq[Double]]] = {
+    val bySub = parts.groupBy(col("m"), col("c"), col("pos"))
+      .agg(avg(col(x)).as("mu")).collect().groupBy(_.getInt(0))
+    books.zipWithIndex.map { case (book, m) =>
+      val byCode = bySub.getOrElse(m, Array.empty).groupBy(_.getInt(1))
+      book.zipWithIndex.map { case (old, code) =>
+        byCode.get(code).fold(old)(rows =>
+          rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq)
+      }
+    }
+  }
+
+  /** Per-centroid direction similarity `v·c / |c|`: |v| is constant
+    * across centroids for a given row, so argmax over these is argmax
+    * over cosine. */
+  private def cellSims(v: Column, cents: Seq[Seq[Double]]): Seq[Column] =
+    cents.map(c => dot(v, typedLit(c)) / lit(math.sqrt(c.map(x => x * x).sum)))
+
+  /** The max-cosine cell of `v`: the sims evaluated ONCE into a
+    * cells-slot array, argmax = first position of the max (the same
+    * tie-break as a CASE chain). The K-branch CASE form re-inlined
+    * greatest(K dots) into every branch, ~K² dot evaluations in the
+    * generated source, and overflowed janino's 64 KB method limit at
+    * K=16, d=64 (the q_vec_pq expression-tree lesson, CLAUDE.md). */
+  private def nearestCell(v: Column, cents: Seq[Seq[Double]]): Column = {
+    val arr = array(cellSims(v, cents): _*)
+    (array_position(arr, array_max(arr)) - 1).cast("int")
+  }
+
+  /** An IVF coarse quantizer: `seeds` sharpened by `LloydIters` Lloyd
+    * rounds over `corpus`, each row assigned to its [[nearestCell]] in
+    * the scan stage (no shuffle). */
+  private def trainCells(corpus: DataFrame, vecCol: String,
+      seeds: Seq[Seq[Double]]): Seq[Seq[Double]] =
+    (1 to LloydIters).foldLeft(seeds) { (cents, _) =>
+      lloydRound(corpus.withColumn("__cell", nearestCell(col(vecCol), cents)),
+        col(vecCol), cents)
+    }
+
+  // ---- the top-k paths: each a candidate generator -----------------------
+
   /** Exact top-k nearest neighbors by cosine for each query vector.
     *
     * `queries`(qid, qv) x `corpus`(id, v) → (qid, neighbor, sim, rank<=k),
@@ -48,17 +177,9 @@ object Vectors {
     * For corpus-x-corpus joins use [[annTopK]] buckets instead.
     */
   def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String, k: Int): DataFrame = {
-    val pairs = corpus
-      .join(broadcast(queries), col(qidCol) =!= col(idCol))
-      .select(col(qidCol).as("qid"), col(idCol).as("neighbor"),
-        cosine(col(qvecCol), col(vecCol)).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
+      queries: DataFrame, qidCol: String, qvecCol: String, k: Int): DataFrame =
+    rankTopK(cosinePairs(corpus.join(broadcast(queries), col(qidCol) =!= col(idCol)),
+      idCol, vecCol, qidCol, qvecCol), "sim", ascending = false, k)
 
   /** k-NN label prediction (Fix & Hodges 1951 — the original
     * nonparametric classifier): each query takes the MAJORITY label of
@@ -120,14 +241,8 @@ object Vectors {
       truth: DataFrame, truthQidCol: String, truthIdCol: String,
       k: Int): DataFrame = {
     require(k >= 1 && k <= 1000, s"k must be in 1..1000: $k")
-    val pairs = corpus
-      .crossJoin(broadcast(queries))
-      .select(col(qidCol).as("qid"), col(idCol).as("neighbor"),
-        cosine(col(qvecCol), col(vecCol)).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor"))
-    val top = pairs.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    val top = rankTopK(cosinePairs(corpus.crossJoin(broadcast(queries)),
+      idCol, vecCol, qidCol, qvecCol), "sim", ascending = false, k)
     truth.select(col(truthQidCol).as("qid"), col(truthIdCol).as("neighbor"))
       .join(top.select(col("qid"), col("neighbor"), col("rank")),
         Seq("qid", "neighbor"), "left")
@@ -158,81 +273,37 @@ object Vectors {
 
   /** IVF-style approximate top-k (the second scale path besides
     * [[annTopK]]'s hyperplane LSH): a coarse quantizer of `nCentroids`
-    * cells — seeded with `nCentroids` vectors sampled DETERMINISTICALLY
-    * from the corpus (lowest xxhash64(id)), then sharpened by
-    * `lloydIters` rounds of Lloyd's k-means (Lloyd 1982, public) — each
+    * cells — seeded with the [[hashSeeds]] rows, then sharpened by
+    * `LloydIters` rounds of Lloyd's k-means (Lloyd 1982, public) — each
     * corpus vector assigned to its max-cosine centroid in the scan stage
     * (codegen argmax over `graft_dot` expressions — no shuffle), and each
     * query probing its `nProbe` nearest cells. Cost ≈ nProbe/nCentroids
     * of brute force; recall is data-dependent like all ANN (VectorSpec
     * measures it on the clustered corpus — the Lloyd rounds buy the same
-    * ≥0.9 recall at HALF the r4 probe cost, nProbe 4 → 2).
-    *
-    * Each Lloyd round is fully distributed: one scan-stage assignment
-    * plus one (cell, position) → mean aggregate — partial aggregation
-    * compresses per task to ≤ nCentroids × dim rows, so the shuffle and
-    * the driver-side collect are both a few KB of centroid state, the
-    * same bounded CONFIG read as the seeding (never a data collect).
-    * Empty cells keep their previous centroid.
+    * ≥0.9 recall at HALF the r4 probe cost, nProbe 4 → 2). Each Lloyd
+    * round is one scan-stage assignment plus one [[lloydRound]]
+    * aggregate.
     */
   def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
-      nCentroids: Int = 16, nProbe: Int = 4, lloydIters: Int = 2): DataFrame = {
-    var cents: Seq[Seq[Double]] = corpus
-      .select(col(vecCol)).orderBy(xxhash64(col(idCol)))
-      .limit(nCentroids).collect().map(_.getSeq[Double](0).toSeq).toSeq
-    // per-centroid direction similarity; |v| is constant across centroids
-    // for a given row, so argmax over dot/|c| == argmax over cosine
-    def sims(v: Column): Seq[Column] = {
-      val norms = cents.map(c => math.sqrt(c.map(x => x * x).sum))
-      cents.zip(norms).map { case (c, n) => dot(v, typedLit(c)) / lit(n) }
-    }
-    def assign(v: Column): Column = {
-      // sims evaluated ONCE into a kCells-slot array, argmax =
-      // first position of the max (same tie-break and float compares
-      // as a CASE chain, bit-identical output). The previous K-branch
-      // CASE re-inlined greatest(K dots) into every branch — ~K² dot
-      // evaluations in generated source — and overflowed janino's
-      // 64 KB method limit at K=16, d=64 (observed: q_vec_ivf codegen
-      // fallback in the r8 bench; the q_vec_pq expression-tree lesson,
-      // CLAUDE.md, in milder form).
-      val arr = array(sims(v): _*)
-      (array_position(arr, array_max(arr)) - 1).cast("int")
-    }
-    for (_ <- 1 to lloydIters) {
-      val means = corpus.withColumn("__cell", assign(col(vecCol)))
-        .select(col("__cell"), posexplode(col(vecCol)))
-        .groupBy(col("__cell"), col("pos")).agg(avg(col("col")).as("m"))
-        .collect()
-      val byCell = means.groupBy(_.getInt(0))
-      cents = cents.zipWithIndex.map { case (old, cell) =>
-        byCell.get(cell).fold(old) { rows =>
-          rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-        }
-      }
-    }
+      nCentroids: Int = 16, nProbe: Int = 4): DataFrame = {
+    val cents = trainCells(corpus, vecCol,
+      hashSeeds(corpus, idCol, vecCol, nCentroids))
     // query side: nProbe best cells via sorted (−sim, cid) struct array —
     // a 16-element HOF per QUERY row (queries are few; corpus side stays
-    // in the codegen argmax above)
-    def probeCells(v: Column): Column = {
-      val arr = array(sims(v).zipWithIndex.map { case (si, i) =>
-        struct((-si).as("neg"), lit(i).as("cid")) }: _*)
-      transform(slice(array_sort(arr), 1, nProbe), x => x.getField("cid"))
-    }
-    val bucketed = corpus.withColumn("__cell", assign(col(vecCol)))
-    val probes = queries
-      .withColumn("__cell", explode(probeCells(col(qvecCol))))
+    // in the codegen argmax)
+    val probeCells = transform(slice(array_sort(array(
+      cellSims(col(qvecCol), cents).zipWithIndex.map { case (si, i) =>
+        struct((-si).as("neg"), lit(i).as("cid")) }: _*)), 1, nProbe),
+      x => x.getField("cid"))
+    val bucketed = corpus.withColumn("__cell", nearestCell(col(vecCol), cents))
+    val probes = queries.withColumn("__cell", explode(probeCells))
     // a corpus row lives in ONE cell and a query's probe cells are
     // distinct, so each (query, neighbor) pair matches at most once —
     // no dedup pass needed
-    val pairs = bucketed
-      .join(broadcast(probes),
-        bucketed("__cell") === probes("__cell") && col(qidCol) =!= col(idCol))
-      .select(col(qidCol).as("qid"), col(idCol).as("neighbor"),
-        cosine(col(qvecCol), col(vecCol)).as("sim"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor"))
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    rankTopK(cosinePairs(bucketed.join(broadcast(probes),
+        bucketed("__cell") === probes("__cell") && col(qidCol) =!= col(idCol)),
+      idCol, vecCol, qidCol, qvecCol), "sim", ascending = false, k)
   }
 
   /** Product-quantization approximate top-k (Jégou, Douze, Schmid,
@@ -244,11 +315,11 @@ object Vectors {
     *
     * Train: the vector is split into `subspaces` contiguous sub-vectors;
     * each subspace gets its own `codebookSize`-centroid codebook — seeded
-    * deterministically (lowest xxhash64(id) rows, the [[ivfTopK]]
-    * convention) and sharpened by `lloydIters` distributed k-means rounds
-    * whose shuffles and driver state are ≤ codebookSize × dim doubles — a
-    * KB-scale CONFIG read, never a data collect. (At full scale, train on
-    * a sample; the codebook is corpus metadata.)
+    * from the [[hashSeeds]] rows and sharpened by `LloydIters`
+    * [[codebookRound]]s whose shuffles and driver state are
+    * ≤ codebookSize × dim doubles — a KB-scale CONFIG read, never a data
+    * collect. (At full scale, train on a sample; the codebook is corpus
+    * metadata.)
     *
     * Encode: per row, per subspace, argmin-L2 over the codebook computed
     * as `‖c‖² − 2·x_m·c` — native `graft_dot` on array slices, scan
@@ -257,16 +328,13 @@ object Vectors {
     * table from ITS sub-vectors; a candidate's approximate dot is then
     * `subspaces` table lookups + adds instead of a `dim`-wide multiply —
     * the per-pair cost cut that makes exhaustive scoring of a compressed
-    * corpus feasible. Top `k × shortlistFactor` by ADC are then re-ranked
-    * by EXACT cosine (vectors joined back for the shortlist only), which
-    * also absorbs ADC's dot-vs-cosine bias on non-unit corpora.
+    * corpus feasible. The ADC scores feed [[shortlistRerank]].
     * Probabilistic recall → judged rows-only (`q_vec_pq`); VectorSpec
     * asserts ≥0.9 recall vs brute force on the clustered corpus.
     */
   def pqTopK(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
-      subspaces: Int = 8, codebookSize: Int = 16, lloydIters: Int = 2,
-      shortlistFactor: Int = 10): DataFrame = {
+      subspaces: Int = 8, codebookSize: Int = 16): DataFrame = {
     // The corpus is scanned once per Lloyd round plus twice after (encode,
     // shortlist re-rank join) — persist for the operator's lifetime via the
     // registry so the next SparkEntry query releases it.
@@ -274,8 +342,7 @@ object Vectors {
 
     // per-subspace codebooks from the deterministic seed rows; `dim` comes
     // from the same collect (no separate size-probe job)
-    val seeds = cached.select(col(vecCol)).orderBy(xxhash64(col(idCol)))
-      .limit(codebookSize).collect().map(_.getSeq[Double](0).toArray)
+    val seeds = hashSeeds(cached, idCol, vecCol, codebookSize)
     require(seeds.length == codebookSize,
       s"corpus smaller than codebookSize=$codebookSize")
     val dim = seeds.head.length
@@ -283,7 +350,7 @@ object Vectors {
     val ds = dim / subspaces
 
     var books: Array[Array[Seq[Double]]] =
-      Array.tabulate(subspaces)(m => seeds.map(v => v.slice(m * ds, (m + 1) * ds).toSeq))
+      Array.tabulate(subspaces)(m => seeds.map(_.slice(m * ds, (m + 1) * ds)).toArray)
     // Encode/LUT are ONE native kernel expression each (graft_pq_encode /
     // graft_pq_lut over the flat subspace-major codebook literal): the
     // composed-builtin form needed subspaces × codebookSize dot-product
@@ -296,30 +363,14 @@ object Vectors {
       typedLit(books.iterator.flatMap(_.iterator.flatten).toSeq)
     def encodeCol(v: Column): Column =
       call_function("graft_pq_encode", v, bookLit, lit(subspaces))
-    // ONE aggregate job per Lloyd round covering ALL subspaces at once
-    // (posexplode codes to (m, code), re-slice the sub-vector, then
-    // (m, code, pos) → mean): the per-round cost is a single scan + a
-    // shuffle of ≤ subspaces × codebookSize × dim partial rows per task,
-    // instead of `subspaces` separate full-corpus jobs whose scheduling
-    // overhead dominated at small SF (6.5s → job-count-bound) and whose
-    // scans repeat at large.
-    for (_ <- 1 to lloydIters) {
-      val means = cached
+    // posexplode codes to (m, code), re-slice the sub-vector per code
+    for (_ <- 1 to LloydIters)
+      books = codebookRound(cached
         .select(col(vecCol).as("__v"),
           posexplode(encodeCol(col(vecCol))).as(Seq("m", "c")))
         .select(col("m"), col("c"),
-          posexplode(slice(col("__v"), col("m") * ds + 1, lit(ds))).as(Seq("pos", "x")))
-        .groupBy(col("m"), col("c"), col("pos")).agg(avg(col("x")).as("mu"))
-        .collect()
-      val bySub = means.groupBy(_.getInt(0))
-      books = Array.tabulate(subspaces) { m =>
-        val byCell = bySub.getOrElse(m, Array.empty).groupBy(_.getInt(1))
-        books(m).zipWithIndex.map { case (old, cell) =>
-          byCell.get(cell).fold(old)(rows =>
-            rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toSeq)
-        }
-      }
-    }
+          posexplode(slice(col("__v"), col("m") * ds + 1, lit(ds))).as(Seq("pos", "x"))),
+        "x", books)
 
     val encoded = cached.select(col(idCol), encodeCol(col(vecCol)).as("__codes"))
     // flat (subspaces × codebookSize) LUT per query; entry s·K + c is
@@ -334,19 +385,7 @@ object Vectors {
           element_at(col("__lut"),
             lit(m * codebookSize) + element_at(col("__codes"), m + 1) + 1))
           .reduce(_ + _).as("__adc"))
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("__adc").desc, col("neighbor"))
-    val shortlist = adc.withColumn("__r", row_number().over(wShort))
-      .filter(col("__r") <= k * shortlistFactor)
-      .select(col("qid"), col("__qv"), col("neighbor"))
-    // exact cosine re-rank, vectors joined back for the shortlist only
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor"))
-    shortlist
-      .join(cached.select(col(idCol).as("neighbor"), col(vecCol).as("__v")), "neighbor")
-      .select(col("qid"), col("neighbor"), cosine(col("__qv"), col("__v")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    shortlistRerank(adc, "__adc", ascending = false, cached, idCol, vecCol, k)
   }
 
   /** IVF-PQ approximate top-k (Jégou et al. 2011 §V, the faiss
@@ -363,12 +402,10 @@ object Vectors {
     * under a CASE — exactly one kernel evaluates per row; K kernel
     * nodes, never the K² expression-tree trap), the per-query LUT is
     * the cell-INDEPENDENT `graft_pq_lut` on the residual books, and
-    * q·c_cell rides the probe row as a precomputed scalar. Exact
-    * cosine re-rank of the k·shortlistFactor shortlist as in
-    * [[pqTopK]]. Residual-book Lloyd rounds aggregate
-    * (subspace, code, pos) residual means in ONE job per round —
-    * per-task partials bounded by subspaces × codebookSize × ds, a
-    * CONFIG-scale collect like the coarse rounds.
+    * q·c_cell rides the probe row as a precomputed scalar. The ADC
+    * scores feed [[shortlistRerank]] as in [[pqTopK]]. Residual-book
+    * Lloyd rounds are [[codebookRound]]s over (subspace, code, pos)
+    * residuals, a CONFIG-scale collect like the coarse rounds.
     *
     * Probabilistic recall → judged rows-only (`q_vec_ivfpq`) plus the
     * driver-judged recall contract `q_vec_ivfpq_recall` (≥0.9@10 on
@@ -377,14 +414,10 @@ object Vectors {
   def ivfPqTopK(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
       nCells: Int = 8, nProbe: Int = 2, subspaces: Int = 8,
-      codebookSize: Int = 16, lloydIters: Int = 2,
-      shortlistFactor: Int = 10): DataFrame = {
+      codebookSize: Int = 16): DataFrame = {
     require(nProbe >= 1 && nProbe <= nCells, s"nProbe 1..$nCells: $nProbe")
     val cached = graft.engine.Caches.persisted(corpus)
-    val seedVecs = cached.select(col(vecCol), col(idCol))
-      .orderBy(xxhash64(col(idCol)))
-      .limit(math.max(nCells, codebookSize)).collect()
-      .map(_.getSeq[Double](0).toArray)
+    val seedVecs = hashSeeds(cached, idCol, vecCol, math.max(nCells, codebookSize))
     require(seedVecs.length >= math.max(nCells, codebookSize),
       s"corpus smaller than max(nCells, codebookSize)")
     val dim = seedVecs.head.length
@@ -393,28 +426,11 @@ object Vectors {
     val ds = dim / subspaces
 
     // ---- coarse quantizer: the ivfTopK seeding + Lloyd rounds ----
-    var cents: Array[Array[Double]] = seedVecs.take(nCells).map(_.clone)
-    def cellSims(v: Column): Seq[Column] = cents.toSeq.map { c =>
-      dot(v, typedLit(c.toSeq)) / lit(math.sqrt(c.map(x => x * x).sum))
-    }
-    def assign(v: Column): Column = {
-      val arr = array(cellSims(v): _*)
-      (array_position(arr, array_max(arr)) - 1).cast("int")
-    }
-    for (_ <- 1 to lloydIters) {
-      val means = cached.withColumn("__cell", assign(col(vecCol)))
-        .select(col("__cell"), posexplode(col(vecCol)))
-        .groupBy(col("__cell"), col("pos")).agg(avg(col("col")).as("m"))
-        .collect()
-      val byCell = means.groupBy(_.getInt(0))
-      cents = cents.zipWithIndex.map { case (old, cell) =>
-        byCell.get(cell).fold(old)(rows =>
-          rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray)
-      }
-    }
-    // driver-side twin of assign() for residual seeds: same left-fold
+    val cents = trainCells(cached, vecCol, seedVecs.take(nCells))
+    val cellCol = nearestCell(col(vecCol), cents)
+    // driver-side twin of `cellCol` for residual seeds: same left-fold
     // dot, same first-max tie rule
-    def cellOf(v: Array[Double]): Int = {
+    def cellOf(v: Seq[Double]): Int = {
       val sims = cents.map { c =>
         var s = 0.0; var i = 0
         while (i < dim) { s += v(i) * c(i); i += 1 }
@@ -424,11 +440,11 @@ object Vectors {
     }
 
     // ---- residual PQ books, seeded from the seed rows' residuals ----
-    var books: Array[Array[Array[Double]]] = Array.tabulate(subspaces) { m =>
+    var books: Array[Array[Seq[Double]]] = Array.tabulate(subspaces) { m =>
       seedVecs.take(codebookSize).map { v =>
         val c = cents(cellOf(v))
-        Array.tabulate(ds)(i => v(m * ds + i) - c(m * ds + i))
-      }
+        (0 until ds).map(i => v(m * ds + i) - c(m * ds + i))
+      }.toArray
     }
     def shiftedBookLit(cell: Int): Column =
       typedLit((0 until subspaces).flatMap(m => books(m).flatMap(b =>
@@ -442,8 +458,8 @@ object Vectors {
             lit(subspaces)))
       }
     val centFlat = typedLit(cents.iterator.flatMap(_.iterator).toSeq)
-    for (_ <- 1 to lloydIters) {
-      val means = cached.withColumn("__cell", assign(col(vecCol)))
+    for (_ <- 1 to LloydIters)
+      books = codebookRound(cached.withColumn("__cell", cellCol)
         .select(col("__cell"), col(vecCol).as("__v"),
           posexplode(encodeCol(col(vecCol), col("__cell")))
             .as(Seq("m", "c")))
@@ -453,29 +469,18 @@ object Vectors {
         .select(col("m"), col("c"),
           (col("x") - element_at(centFlat,
             (col("__cell") * dim + col("m") * ds + col("pos") + 1)
-              .cast("int"))).as("rx"), col("pos"))
-        .groupBy(col("m"), col("c"), col("pos"))
-        .agg(avg(col("rx")).as("mu"))
-        .collect()
-      val bySub = means.groupBy(_.getInt(0))
-      books = Array.tabulate(subspaces) { m =>
-        val byCell = bySub.getOrElse(m, Array.empty).groupBy(_.getInt(1))
-        books(m).zipWithIndex.map { case (old, cell) =>
-          byCell.get(cell).fold(old)(rows =>
-            rows.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray)
-        }
-      }
-    }
+              .cast("int"))).as("rx"), col("pos")),
+        "rx", books)
 
-    val encoded = cached.withColumn("__cell", assign(col(vecCol)))
+    val encoded = cached.withColumn("__cell", cellCol)
       .select(col(idCol), col("__cell"),
         encodeCol(col(vecCol), col("__cell")).as("__codes"))
     // probe rows carry (cell, q·c_cell); sorted (−sim, cid) like ivfTopK
     def probeStructs(v: Column): Column = {
       val arr = array(cents.zipWithIndex.map { case (c, i) =>
         val n = math.sqrt(c.map(x => x * x).sum)
-        struct((dot(v, typedLit(c.toSeq)) / lit(-n)).as("neg"),
-          lit(i).as("cid"), dot(v, typedLit(c.toSeq)).as("qdotc"))
+        struct((dot(v, typedLit(c)) / lit(-n)).as("neg"),
+          lit(i).as("cid"), dot(v, typedLit(c)).as("qdotc"))
       }: _*)
       slice(array_sort(arr), 1, nProbe)
     }
@@ -495,20 +500,7 @@ object Vectors {
           element_at(col("__lut"), lit(m * codebookSize) +
             element_at(col("__codes"), m + 1) + 1)).reduce(_ + _))
           .as("__adc"))
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("__adc").desc, col("neighbor"))
-    val shortlist = adc.withColumn("__r", row_number().over(wShort))
-      .filter(col("__r") <= k * shortlistFactor)
-      .select(col("qid"), col("__qv"), col("neighbor"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor"))
-    shortlist
-      .join(cached.select(col(idCol).as("neighbor"), col(vecCol).as("__v")),
-        "neighbor")
-      .select(col("qid"), col("neighbor"),
-        cosine(col("__qv"), col("__v")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    shortlistRerank(adc, "__adc", ascending = false, cached, idCol, vecCol, k)
   }
 
   /** Scalar (int8) quantization of an embedding column — the STORAGE
@@ -544,16 +536,13 @@ object Vectors {
     * codes instead of float vectors — `graft_sq8_dot` dequantizes on the
     * fly inside the kernel loop (query stays float; the asymmetric trick
     * of SQ search), ranked by cosine against the index-time dequantized
-    * norm, then the `k·shortlistFactor` shortlist re-ranks by EXACT
-    * cosine with the true vectors joined back — the same
-    * shortlist-then-exact shape as [[pqTopK]], at 4× less corpus traffic
-    * than brute force with near-exact candidate order (SQ8's ~0.4%
-    * per-component error vs PQ's subspace collapse). Judged `q_vec_sq8_recall`
-    * (recall@10 on the clustered fixture, driver-judged like the
-    * LSH/IVF/PQ rows). */
+    * norm, then [[shortlistRerank]] — the same shortlist-then-exact
+    * shape as [[pqTopK]], at 4× less corpus traffic than brute force
+    * with near-exact candidate order (SQ8's ~0.4% per-component error
+    * vs PQ's subspace collapse). Judged `q_vec_sq8_recall` (recall@10 on
+    * the clustered fixture, driver-judged like the LSH/IVF/PQ rows). */
   def sq8TopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
-      shortlistFactor: Int = 10): DataFrame = {
+      queries: DataFrame, qidCol: String, qvecCol: String, k: Int): DataFrame = {
     val cached = graft.engine.Caches.persisted(corpus)
     val index = scalarQuantize(cached, idCol, vecCol)
     val approx = index.join(broadcast(queries), col(qidCol) =!= col(idCol))
@@ -563,20 +552,7 @@ object Vectors {
           call_function("graft_sq8_dot", col(qvecCol), col("codes"),
             col("vmin"), col("scale")) / col("norm"))
           .otherwise(lit(-2.0)).as("__s"))
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("__s").desc, col("neighbor"))
-    val shortlist = approx.withColumn("__r", row_number().over(wShort))
-      .filter(col("__r") <= k * shortlistFactor)
-      .select(col("qid"), col("__qv"), col("neighbor"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor"))
-    shortlist
-      .join(cached.select(col(idCol).as("neighbor"), col(vecCol).as("__v")),
-        "neighbor")
-      .select(col("qid"), col("neighbor"),
-        cosine(col("__qv"), col("__v")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    shortlistRerank(approx, "__s", ascending = false, cached, idCol, vecCol, k)
   }
 
   /** Binary-quantization approximate top-k (ANN path 5, the COARSEST
@@ -585,17 +561,15 @@ object Vectors {
     * vector, 8 bytes for a dim-64 embedding, 32× less traffic than even
     * SQ8 — ranked by Hamming distance (one XOR+POPCNT per 64 dims in
     * the `graft_hamming` kernel; for sign codes, Hamming is a monotone
-    * proxy for angular distance — the SimHash identity), then the
-    * `k·shortlistFactor` shortlist re-ranks by EXACT cosine with the
-    * true vectors joined back, the same shortlist-then-exact shape as
+    * proxy for angular distance — the SimHash identity), then
+    * [[shortlistRerank]], the same shortlist-then-exact shape as
     * [[sq8TopK]]/[[pqTopK]]. The scan-everything-cheaply alternative to
     * [[annTopK]]'s bucket pruning: no recall cliff from bucket misses,
     * corpus traffic 1 bit/dimension. Judged `q_vec_bq` (pack+Hamming
     * kernels fully oracled pairwise) and `q_vec_bq_recall` (recall@10
     * on the clustered fixture, driver-judged like the other ANN rows). */
   def bqTopK(corpus: DataFrame, idCol: String, vecCol: String,
-      queries: DataFrame, qidCol: String, qvecCol: String, k: Int,
-      shortlistFactor: Int = 10): DataFrame = {
+      queries: DataFrame, qidCol: String, qvecCol: String, k: Int): DataFrame = {
     val cached = graft.engine.Caches.persisted(corpus)
     val index = cached.select(col(idCol),
       call_function("graft_bq_pack", col(vecCol)).as("__codes"))
@@ -606,20 +580,7 @@ object Vectors {
         col(idCol).as("neighbor"),
         call_function("graft_hamming", col("__codes"), col("__qcodes"))
           .as("__h"))
-    val wShort = Window.partitionBy(col("qid"))
-      .orderBy(col("__h").asc, col("neighbor"))
-    val shortlist = approx.withColumn("__r", row_number().over(wShort))
-      .filter(col("__r") <= k * shortlistFactor)
-      .select(col("qid"), col("__qv"), col("neighbor"))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor"))
-    shortlist
-      .join(cached.select(col(idCol).as("neighbor"), col(vecCol).as("__v")),
-        "neighbor")
-      .select(col("qid"), col("neighbor"),
-        cosine(col("__qv"), col("__v")).as("sim"))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    shortlistRerank(approx, "__h", ascending = true, cached, idCol, vecCol, k)
   }
 
   /** Embedding-cosine near-duplicate pairs, EXACT: all (da < db) with
@@ -749,17 +710,11 @@ object Vectors {
       .withColumn("__probe", explode(array(
         probeMasks(numPlanes, hamming).map(m =>
           col("__qbucket").bitwiseXOR(lit(m))): _*)))
-    val pairs = bucketed
-      .join(broadcast(probes),
-        col("__bucket") === col("__probe") && col(qidCol) =!= col(idCol))
-      .select(col(qidCol).as("qid"), col(idCol).as("neighbor"),
-        cosine(col(qvecCol), col(vecCol)).as("sim"))
+    val pairs = cosinePairs(bucketed.join(broadcast(probes),
+        col("__bucket") === col("__probe") && col(qidCol) =!= col(idCol)),
+      idCol, vecCol, qidCol, qvecCol)
       .distinct() // a neighbor can match several probes of one query
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("neighbor"))
-    pairs
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTopK(pairs, "sim", ascending = false, k)
   }
 
   /** Semantic deduplication (SemDeDup — Abbas et al. 2023, public): keep
@@ -806,10 +761,9 @@ object Vectors {
     * the cluster id. Euclidean objective; `argmin ‖v−c‖²` reduces to
     * `argmin (‖c‖² − 2v·c)` so each round's assignment is a codegen
     * argmin over k `graft_dot` terms in the SCAN stage — no shuffle,
-    * no crossJoin against a centroid table. Each Lloyd round costs one
-    * (cluster, position) partial-aggregated mean — the shuffle and the
-    * driver-side state are k×d doubles, the same bounded CONFIG read
-    * as [[ivfTopK]]'s seeding (never a data collect). Deterministic:
+    * no crossJoin against a centroid table. Each Lloyd round is one
+    * [[lloydRound]], the same kernel as [[ivfTopK]]'s — the shuffle and
+    * the driver-side state are k×d doubles. Deterministic:
     * FARTHEST-FIRST seeding (Gonzalez 1985 k-center traversal — seed 1
     * is the first vector in xxhash64(id) order, each next seed
     * maximizes its distance to the chosen set, ties by the hash) —
@@ -838,11 +792,8 @@ object Vectors {
     val src = graft.engine.Caches.persisted(
       emb.select(col(idCol), v.as(vecCol)))
     val vv = col(vecCol)
-    val firstSeed = src
-      .select(vv.as("__v")).orderBy(xxhash64(col(idCol)))
-      .limit(1).collect()
-    require(firstSeed.nonEmpty, "kmeansAssign: empty input")
-    var cents: Seq[Seq[Double]] = Seq(firstSeed.head.getSeq[Double](0).toSeq)
+    var cents = hashSeeds(src, idCol, vecCol, 1)
+    require(cents.nonEmpty, "kmeansAssign: empty input")
     while (cents.size < k) {
       // next seed: maximal min-distance² to the chosen set (ties by
       // hash). |v|² matters here — the comparison is across ROWS, not
@@ -871,18 +822,8 @@ object Vectors {
         val arr = array(scores: _*)
         (array_position(arr, array_min(arr)) - 1).cast("int")
       }
-    for (_ <- 1 to iters) {
-      val means = src.withColumn("__cell", assign(vv))
-        .select(col("__cell"), posexplode(vv))
-        .groupBy(col("__cell"), col("pos")).agg(avg(col("col")).as("m"))
-        .collect()
-      val byCell = means.groupBy(_.getInt(0))
-      cents = cents.zipWithIndex.map { case (old, cell) =>
-        byCell.get(cell).fold(old) { rows =>
-          rows.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq
-        }
-      }
-    }
+    for (_ <- 1 to iters)
+      cents = lloydRound(src.withColumn("__cell", assign(vv)), vv, cents)
     src.select(col(idCol), assign(vv).as("cluster"))
   }
 

@@ -115,34 +115,32 @@ object VersionedTable {
   private def donorFile(root: Path): Path =
     new Path(new Path(root, LogDir), "donor")
 
-  private def readDonor(fs: FileSystem, root: Path): Option[(Path, Set[String])] = {
-    val p = donorFile(root)
-    if (!fs.exists(p)) None
-    else {
-      val lines = readText(fs, p).split("\n").filter(_.nonEmpty)
-      Some((new Path(lines.head), lines.tail.toSet))
+  /** Resolves a data/tombstone directory NAME under `root` to its
+    * physical location: a shallow clone's donor-era names live under the
+    * DONOR root (recursively — a donor may itself be a shallow clone);
+    * everything else is local. The single seam every directory read goes
+    * through, so COW/skip/stats/mapping reads all see borrowed
+    * directories transparently; WRITES never resolve through it (a clone
+    * always lands its own directories, numbered above the fork). Each
+    * root's marker is read once, on first use, so one operation probes
+    * it once however many directories it resolves. */
+  private final class DirPaths(val fs: FileSystem, root: Path) {
+    /** The donor's resolver and the borrowed names, when `root` is a
+      * shallow clone. */
+    lazy val donor: Option[(DirPaths, Set[String])] = {
+      val p = donorFile(root)
+      if (!fs.exists(p)) None
+      else {
+        val lines = readText(fs, p).split("\n").filter(_.nonEmpty)
+        Some((new DirPaths(fs, new Path(lines.head)), lines.tail.toSet))
+      }
     }
-  }
 
-  /** Resolve a data/tombstone directory NAME to its physical location:
-    * a shallow clone's donor-era names live under the DONOR root
-    * (recursively — a donor may itself be a shallow clone); everything
-    * else is local. The single seam every directory read goes through,
-    * so COW/skip/stats/mapping reads all see borrowed directories
-    * transparently; WRITES never resolve through it (a clone always
-    * lands its own directories, numbered above the fork). */
-  private def dataPath(fs: FileSystem, root: Path, d: String): Path =
-    readDonor(fs, root) match {
-      case Some((donorRoot, donorDirs)) if donorDirs.contains(d) =>
-        dataPath(fs, donorRoot, d)
+    def apply(d: String): Path = donor match {
+      case Some((up, borrowed)) if borrowed.contains(d) => up(d)
       case _ => new Path(root, d)
     }
-
-  /** [[dataPath]] when only spark is at hand (read helpers without an
-    * `fs` in scope). */
-  private def dataPath(spark: SparkSession, root: Path, d: String): Path =
-    dataPath(root.getFileSystem(spark.sparkContext.hadoopConfiguration),
-      root, d)
+  }
 
   private def manifestPath(root: Path, v: Int): Path =
     new Path(new Path(root, LogDir), f"$v%08d.json")
@@ -300,10 +298,13 @@ object VersionedTable {
     def manifest(v: Int): Manifest = manifests.synchronized(
       manifests.getOrElseUpdate(v, readManifest(fs, manifestPath(rootP, v))))
 
+    /** This operation's directory resolver (one donor-chain read). */
+    val paths: DirPaths = shared.fold(new DirPaths(fs, rootP))(_.paths)
+
     private val dirStats =
       scala.collection.mutable.Map.empty[String, Option[DirStat]]
     def stats(d: String): Option[DirStat] = dirStats.synchronized(
-      dirStats.getOrElseUpdate(d, readStats(fs, rootP, d)))
+      dirStats.getOrElseUpdate(d, readStats(paths, d)))
 
     /** This operation's snapshot at version `v`. */
     def atVersion(v: Int): Snapshot = new Snapshot(spark, root, Some(v), Some(this))
@@ -315,31 +316,31 @@ object VersionedTable {
     lazy val log: Seq[Manifest] =
       versions.filter(_ < base.version).map(manifest) :+ base
     lazy val renames: Seq[(Int, String, String)] = renameOps(log)
-    lazy val drops: Seq[DropState] = dropChain(fs, rootP, log)
+    lazy val drops: Seq[DropState] = dropChain(paths, log)
     lazy val widens: Seq[(Int, String, DataType)] = widenOps(log)
     lazy val widenedSchema: StructType =
-      widenedSnapshot(spark, rootP, base, renames, widens)
+      widenedSnapshot(spark, paths, base, renames, widens)
     /** The schema rewrites and probes pin their per-dir reads to: the
       * plain footer union when no widen is in effect, else the widened
       * union (`mergeSchema` throws CANNOT_MERGE_SCHEMAS on the mixed
       * int/bigint layout a widen creates). */
     lazy val schema: StructType =
       if (widens.isEmpty)
-        unionSchema(spark, rootP, base.dataDirs, base.partitionCols.nonEmpty)
+        unionSchema(spark, paths, base.dataDirs, base.partitionCols.nonEmpty)
       else widenedSchema
-    lazy val tombs: Seq[(String, Set[String])] = tombScopes(fs, rootP, base)
+    lazy val tombs: Seq[(String, Set[String])] = tombScopes(paths, base)
 
     def dirTombs(d: String): Seq[String] = tombs.filter(_._2.contains(d)).map(_._1)
 
     /** Directory `d` as a rewrite sees it: pinned to [[schema]], its
       * tombstones subtracted, dead dropped-column values nulled. */
-    def resolved(d: String): DataFrame = maskDeadDir(applyTombs(spark, rootP,
-      readDirsAs(spark, rootP, Seq(d), schema), dirTombs(d)), d, drops)
+    def resolved(d: String): DataFrame = maskDeadDir(applyTombs(spark, paths,
+      readDirsAs(spark, paths, Seq(d), schema), dirTombs(d)), d, drops)
 
     /** `df`, read from `dirs`, minus the columns dead in all of them. */
     def pruned(df: DataFrame, dirs: Seq[String],
         exempt: Set[String] = Set.empty): DataFrame =
-      pruneDeadCols(spark, rootP, df, dirs, drops, exempt)
+      pruneDeadCols(spark, paths, df, dirs, drops, exempt)
 
     def resolvedUnion(dirs: Seq[String]): DataFrame =
       pruned(dirs.map(resolved).reduce(_.unionByName(_)), dirs)
@@ -362,8 +363,8 @@ object VersionedTable {
       * the no-merge single-footer fast path — are byte-identical. */
     def read(mergeSchema: Boolean): DataFrame = {
       def resolvedAll(tag: Boolean): DataFrame =
-        if (widens.isEmpty) resolvedRead(spark, fs, rootP, base, mergeSchema, tag)
-        else resolvedReadAs(spark, fs, rootP, base, widenedSchema, tag)
+        if (widens.isEmpty) resolvedRead(spark, paths, base, mergeSchema, tag)
+        else resolvedReadAs(spark, paths, base, widenedSchema, tag)
       if (drops.isEmpty) applyRenames(resolvedAll(false), renames)
       else {
         val masked = drops.flatMap(_.dead).foldLeft(resolvedAll(true)) {
@@ -687,11 +688,11 @@ object VersionedTable {
       // (reuse would resurrect it for readers of older versions) —
       // matching the sidecar path, whose stats never see tombstones
       val m = (if (s.widens.isEmpty)
-          readDirs(spark, s.rootP, base.dataDirs, mergeSchema = true,
+          readDirs(spark, s.paths, base.dataDirs, mergeSchema = true,
             base.partitionCols.nonEmpty)
         // RAW union again, just pinned to the wide schema — mergeSchema
         // throws on the mixed-width layout a widen creates
-        else readDirsAs(spark, s.rootP, base.dataDirs, s.widenedSchema))
+        else readDirsAs(spark, s.paths, base.dataDirs, s.widenedSchema))
         .agg(max(col(idCol).cast("long"))).head
       if (m.isNullAt(0)) 0L else m.getLong(0)
     }
@@ -854,7 +855,7 @@ object VersionedTable {
     val s = new Snapshot(spark, root)
     appendKernel(s, df, tag, check = { dir =>
       val bad = graft.operators.Relational.dqReport(
-          readDirs(spark, s.rootP, Seq(dir)), rowRules, uniqueKeys)
+          readDirs(spark, s.paths, Seq(dir)), rowRules, uniqueKeys)
         .collect().map(r => (r.getString(0), r.getLong(1))).filter(_._2 != 0L)
       if (bad.nonEmpty)
         throw new IllegalStateException("appendAudited: audit failed, " +
@@ -915,7 +916,7 @@ object VersionedTable {
     val base = s.base
     if (base.partitionCols == newCols) base
     else {
-      val snapCols = resolvedRead(spark, s.fs, s.rootP, base, mergeSchema = true)
+      val snapCols = resolvedRead(spark, s.paths, base, mergeSchema = true)
         .schema.fieldNames.toSet
       val missing = newCols.filterNot(snapCols)
       require(missing.isEmpty,
@@ -925,7 +926,7 @@ object VersionedTable {
     }
   }
 
-  private def readDirs(spark: SparkSession, root: Path, dirs: Seq[String],
+  private def readDirs(spark: SparkSession, paths: DirPaths, dirs: Seq[String],
       mergeSchema: Boolean = false, partitioned: Boolean = false,
       tagDirs: Boolean = false): DataFrame = {
     val reader =
@@ -936,12 +937,12 @@ object VersionedTable {
     // the same order as the manifest itself
     if (partitioned && dirs.size > 1)
       dirs.map { d =>
-        val df = reader.parquet(dataPath(spark, root, d).toString)
+        val df = reader.parquet(paths(d).toString)
         if (tagDirs) df.withColumn(DirCol, lit(d)) else df
       }.reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
     else {
       val df = reader.parquet(
-        dirs.map(d => dataPath(spark, root, d).toString): _*)
+        dirs.map(d => paths(d).toString): _*)
       if (!tagDirs) df
       else if (dirs.size == 1) df.withColumn(DirCol, lit(dirs.head))
       // multi-path single scan: derive the tag from the file path (the
@@ -960,12 +961,12 @@ object VersionedTable {
     * probes/rewrites treat pre-evolution directories uniformly. Always
     * one read per directory (partition discovery then has a single
     * root), unioned by name. */
-  private def readDirsAs(spark: SparkSession, root: Path, dirs: Seq[String],
+  private def readDirsAs(spark: SparkSession, paths: DirPaths, dirs: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
       tagDirs: Boolean = false): DataFrame =
     dirs.map { d =>
       val df = spark.read.schema(schema)
-        .parquet(dataPath(spark, root, d).toString)
+        .parquet(paths(d).toString)
       if (tagDirs) df.withColumn(DirCol, lit(d)) else df
     }.reduce(_.unionByName(_))
 
@@ -983,10 +984,10 @@ object VersionedTable {
 
   /** The tombstones of `m` with their masked-directory sets — one tiny
     * sidecar read per tombstone, O(tombstones since last compact). */
-  private def tombScopes(fs: FileSystem, root: Path,
+  private def tombScopes(paths: DirPaths,
       m: Manifest): Seq[(String, Set[String])] =
     m.deleteDirs.map { t =>
-      t -> readText(fs, new Path(dataPath(fs, root, t), AppliesFile))
+      t -> readText(paths.fs, new Path(paths(t), AppliesFile))
         .split("\n").filter(_.nonEmpty).toSet
     }
 
@@ -994,12 +995,12 @@ object VersionedTable {
     * tombstone, on the tombstone parquet's OWN columns (the tombstone is
     * self-describing; different deletes may use different key sets).
     * Rows whose key columns are null never match an anti-join: kept. */
-  private def applyTombs(spark: SparkSession, root: Path, df: DataFrame,
+  private def applyTombs(spark: SparkSession, paths: DirPaths, df: DataFrame,
       tombs: Seq[String]): DataFrame =
     tombs.foldLeft(df) { (acc, t) =>
       // tombstones are key files (small by contract): broadcast the
       // build side so the subtraction never shuffles the data scan
-      val keys = broadcast(spark.read.parquet(dataPath(spark, root, t).toString))
+      val keys = broadcast(spark.read.parquet(paths(t).toString))
       acc.join(keys, keys.columns.toSeq, "left_anti")
     }
 
@@ -1009,14 +1010,14 @@ object VersionedTable {
     * group anti-joins its tombstones, groups union back by name. With
     * tombstones present the read always pins the snapshot-union schema
     * (groups on either side of a schema evolution must align). */
-  private def resolvedRead(spark: SparkSession, fs: FileSystem, root: Path,
+  private def resolvedRead(spark: SparkSession, paths: DirPaths,
       m: Manifest, mergeSchema: Boolean,
       tagDirs: Boolean = false): DataFrame =
     if (m.deleteDirs.isEmpty)
-      readDirs(spark, root, m.dataDirs, mergeSchema, m.partitionCols.nonEmpty,
+      readDirs(spark, paths, m.dataDirs, mergeSchema, m.partitionCols.nonEmpty,
         tagDirs)
-    else resolvedReadAs(spark, fs, root, m,
-      unionSchema(spark, root, m.dataDirs, m.partitionCols.nonEmpty), tagDirs)
+    else resolvedReadAs(spark, paths, m,
+      unionSchema(spark, paths, m.dataDirs, m.partitionCols.nonEmpty), tagDirs)
 
   /** MERGE-ON-READ delete — the Iceberg v2 equality-delete / Delta
     * deletion-vector capability class, next to [[deleteWhere]]'s
@@ -1194,11 +1195,11 @@ object VersionedTable {
   /** Does any parquet file under `root/d` carry top-level column
     * `colName`? Driver-side footer metadata only (the stats-scraper
     * economics), early exit on the first hit. */
-  private def dirHasColumn(fs: FileSystem, root: Path, d: String,
+  private def dirHasColumn(paths: DirPaths, d: String,
       colName: String): Boolean = {
     import scala.jdk.CollectionConverters._
-    parquetFiles(fs, dataPath(fs, root, d)).exists { f =>
-      val reader = openFooter(fs, f)
+    parquetFiles(paths.fs, paths(d)).exists { f =>
+      val reader = openFooter(paths.fs, f)
       try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
         .exists(_.getName == colName)
       finally reader.close()
@@ -1210,7 +1211,7 @@ object VersionedTable {
     * it (per-source era scoping: a physical name renamed away at `vr` is
     * dead only in directories present at `vr` — a later append reusing
     * the bare name is a different column and stays live). */
-  private def dropChain(fs: FileSystem, root: Path,
+  private def dropChain(paths: DirPaths,
       manifests: Seq[Manifest]): Seq[DropState] =
     manifests.filter(_.op == "drop-column").map { m =>
       val c = m.tag.split(":", 2)(1)
@@ -1242,7 +1243,7 @@ object VersionedTable {
                 if (fresh.nonEmpty) {
                   if (x.version != prevV + 1) open = false
                   else if (CarryOps(x.op)) era ++= fresh
-                  else if (fresh.exists(d => dirHasColumn(fs, root, d, f)))
+                  else if (fresh.exists(d => dirHasColumn(paths, d, f)))
                     open = false
                 }
                 seen ++= x.dataDirs
@@ -1282,7 +1283,7 @@ object VersionedTable {
     * of the schema until a genuine re-add writes it again: footers are
     * consulted only for directories outside every death set (config-
     * scale driver reads, only when drops exist). */
-  private def pruneDeadCols(spark: SparkSession, root: Path, df: DataFrame,
+  private def pruneDeadCols(spark: SparkSession, paths: DirPaths, df: DataFrame,
       srcDirs: Seq[String], drops: Seq[DropState],
       exempt: Set[String] = Set.empty): DataFrame =
     if (drops.isEmpty) df
@@ -1290,7 +1291,7 @@ object VersionedTable {
       val footers = scala.collection.mutable.Map.empty[String, Set[String]]
       def footerHas(d: String, p: String): Boolean =
         footers.getOrElseUpdate(d, spark.read
-          .parquet(dataPath(spark, root, d).toString).schema.fieldNames.toSet)
+          .parquet(paths(d).toString).schema.fieldNames.toSet)
           .contains(p)
       val prunable = drops.flatMap(_.dead.keys).distinct
         .filter(df.columns.contains)
@@ -1397,12 +1398,12 @@ object VersionedTable {
     * pre-rename directories, forward chain after it so post-widen
     * renames keep reading wide). Non-numeric conflicts still fail
     * loudly (widening never weakens schema-conflict detection). */
-  private def widenedSnapshot(spark: SparkSession, root: Path, m: Manifest,
+  private def widenedSnapshot(spark: SparkSession, paths: DirPaths, m: Manifest,
       rops: Seq[(Int, String, String)],
       widens: Seq[(Int, String, DataType)]): StructType = {
     val fields = scala.collection.mutable.LinkedHashMap[String, StructField]()
     m.dataDirs.foreach { d =>
-      spark.read.parquet(dataPath(spark, root, d).toString).schema.foreach { f =>
+      spark.read.parquet(paths(d).toString).schema.foreach { f =>
         fields.get(f.name) match {
           case None => fields(f.name) = f
           case Some(g) =>
@@ -1438,18 +1439,18 @@ object VersionedTable {
     * reader upcasts int32→int64 / float→double against a requested
     * wider schema), columns a directory predates read null, tombstone
     * groups subtract exactly as in [[resolvedRead]]. */
-  private def resolvedReadAs(spark: SparkSession, fs: FileSystem,
-      root: Path, m: Manifest, schema: StructType,
+  private def resolvedReadAs(spark: SparkSession, paths: DirPaths,
+      m: Manifest, schema: StructType,
       tagDirs: Boolean): DataFrame =
     if (m.deleteDirs.isEmpty)
-      readDirsAs(spark, root, m.dataDirs, schema, tagDirs)
+      readDirsAs(spark, paths, m.dataDirs, schema, tagDirs)
     else {
-      val tombs = tombScopes(fs, root, m)
+      val tombs = tombScopes(paths, m)
       m.dataDirs.groupBy(d => tombs.filter(_._2.contains(d)).map(_._1))
         .toSeq.sortBy(_._2.head) // deterministic plan shape
         .map { case (ts, dirs) =>
-          applyTombs(spark, root,
-            readDirsAs(spark, root, dirs, schema, tagDirs), ts)
+          applyTombs(spark, paths,
+            readDirsAs(spark, paths, dirs, schema, tagDirs), ts)
         }
         .reduce(_.unionByName(_))
     }
@@ -1467,13 +1468,13 @@ object VersionedTable {
     * (plus discovered partition columns) determines it; dirs fold with
     * the same field-merge rule mergeSchema applies per footer pair
     * (the bridged `StructType.merge`). */
-  private def unionSchema(spark: SparkSession, root: Path,
+  private def unionSchema(spark: SparkSession, paths: DirPaths,
       dirs: Seq[String], partitioned: Boolean): StructType =
     if (!partitioned)
-      readDirs(spark, root, dirs, mergeSchema = true, partitioned = false).schema
+      readDirs(spark, paths, dirs, mergeSchema = true, partitioned = false).schema
     else
       dirs.map(d =>
-          readDirs(spark, root, Seq(d), mergeSchema = false, partitioned).schema)
+          readDirs(spark, paths, Seq(d), mergeSchema = false, partitioned).schema)
         .reduce(org.apache.spark.sql.GraftSqlBridge.mergeSchemas)
 
   /** Widen a column's type WITHOUT rewriting any data — Delta type
@@ -1756,7 +1757,7 @@ object VersionedTable {
             .select(srcKept.map(col): _*))
         val pieces = rewritten.toSeq ++ inserts.toSeq
         Some(if (pieces.isEmpty)
-          readDirsAs(spark, s.rootP, s.base.dataDirs.take(1), s.schema).limit(0)
+          readDirsAs(spark, s.paths, s.base.dataDirs.take(1), s.schema).limit(0)
         else pieces.reduce(_.unionByName(_, allowMissingColumns = true)))
       }
     }
@@ -2177,11 +2178,11 @@ object VersionedTable {
     val latestM = s.manifest(latest)
     // union schema over the LATEST snapshot so evolved appends stream
     // with their late columns (pre-evolution dirs fill them as null)
-    val snap = readDirs(spark, s.rootP, latestM.dataDirs, mergeSchema = true,
+    val snap = readDirs(spark, s.paths, latestM.dataDirs, mergeSchema = true,
       latestM.partitionCols.nonEmpty).schema
     val newDirs = latestM.dataDirs.filterNot(baseDirs)
     def src(d: String): DataFrame = spark.readStream.schema(snap)
-      .parquet(dataPath(spark, s.rootP, d).toString)
+      .parquet(s.paths(d).toString)
     val df =
       if (newDirs.isEmpty)
         src(latestM.dataDirs.head).filter(lit(false))
@@ -2353,7 +2354,7 @@ object VersionedTable {
       mergeSchema: Boolean = false): DataFrame = {
     val s = new Snapshot(spark, root)
     val (fork, head) = requireBranch(s.fs, s.rootP, name)
-    resolvedRead(spark, s.fs, s.rootP, branchHead(s, name, fork, head),
+    resolvedRead(spark, s.paths, branchHead(s, name, fork, head),
       mergeSchema)
   }
 
@@ -2836,12 +2837,12 @@ object VersionedTable {
 
   /** Read a directory's stats sidecar; None (absent/unparsable) means
     * the directory predates stats or scraping failed — unprunable. */
-  private def readStats(fs: FileSystem, root: Path, dir: String): Option[DirStat] = {
-    val p = new Path(dataPath(fs, root, dir), StatsFile)
+  private def readStats(paths: DirPaths, dir: String): Option[DirStat] = {
+    val p = new Path(paths(dir), StatsFile)
     try {
-      if (!fs.exists(p)) None
+      if (!paths.fs.exists(p)) None
       else {
-        val lines = readText(fs, p).split("\n").filter(_.nonEmpty)
+        val lines = readText(paths.fs, p).split("\n").filter(_.nonEmpty)
         val rows = lines.head.stripPrefix("rows\t").toLong
         val cols = lines.tail.map { l =>
           val f = l.split("\t", -1)
@@ -2979,7 +2980,7 @@ object VersionedTable {
     // range column postdates some directories, the surviving old dirs
     // read it as null (never matching the BETWEEN — consistent with
     // their absent stats entry keeping them readable, not prunable)
-    resolvedRead(s.spark, s.fs, s.rootP, s.base.copy(dataDirs = dirs),
+    resolvedRead(s.spark, s.paths, s.base.copy(dataDirs = dirs),
       mergeSchema = mergeSchema || s.base.deleteDirs.nonEmpty).filter(pred)
   }
 
@@ -3131,7 +3132,7 @@ object VersionedTable {
       src.widens.nonEmpty ||
       // a shallow-clone source's directories live under ITS donor —
       // materialize rather than chain byte-copies across roots
-      readDonor(sfs, srcP).nonEmpty
+      src.paths.donor.nonEmpty
     val dirs =
       if (!mapped) {
         // byte-copy fast path: no mapping debt, directories carry as-is
@@ -3180,7 +3181,7 @@ object VersionedTable {
     *
     *  - the clone's `_log/donor` records the donor root + the borrowed
     *    directory NAMES (frozen at clone time); every directory read
-    *    resolves through [[dataPath]], so COW probes, skip-reads,
+    *    resolves through [[DirPaths]], so COW probes, skip-reads,
     *    stats, tombstones and mapping reads all see borrowed bytes
     *    transparently (recursively — a clone of a clone chains);
     *  - the donor gains `_log/clones/<id>` and its [[vacuum]] PINS the

@@ -418,6 +418,14 @@ class PlanSpec extends SparkTestBase {
     // must stay bounded
     assert(wglCount(Vectors.sq8TopK(corpus, "id", "v", qs, "qid", "qv", 3)) >= 2)
     assert(wglCount(Vectors.bqTopK(corpus, "id", "v", qs, "qid", "qv", 3)) >= 2)
+    assert(wglCount(Vectors.pqTopK(corpus, "id", "v", qs, "qid", "qv", 3)) >= 2)
+    assert(wglCount(Vectors.ivfPqTopK(corpus, "id", "v", qs, "qid", "qv", 3)) >= 2)
+    // the single-rank paths: every candidate generator ends in the same
+    // bounded ranking step
+    assert(wglCount(Vectors.ivfTopK(corpus, "id", "v", qs, "qid", "qv", 3)) >= 1)
+    assert(wglCount(Vectors.annTopK(corpus, "id", "v", qs, "qid", "qv", 3)) >= 1)
+    assert(wglCount(Vectors.retrievalRecall(corpus, "id", "v", qs, "qid", "qv",
+      qs.select(col("qid"), (col("qid") - 1000L).as("tid")), "qid", "tid", 3)) >= 1)
     spark.catalog.clearCache()
   }
 

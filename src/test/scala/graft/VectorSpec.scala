@@ -162,6 +162,38 @@ class VectorSpec extends SparkTestBase {
     graft.engine.Caches.releaseAll()
   }
 
+  test("a shortlist holding every candidate re-ranks to exactly brute force") {
+    // 40 ids at k = 5: each query has 39 candidates, fewer than the
+    // k · 10 shortlist, so every quantized path's approximate score only
+    // picks the shortlist and the exact stage alone decides the order
+    val corpus = Vectors.syntheticClustered((0L until 40L).toDF("id"), "id",
+      4, 16, 0.05)
+    val queries = corpus.filter($"id" % 10 === 0)
+      .select($"id".as("qid"), $"vec".as("qv"))
+    def rows(df: DataFrame) = df.select("qid", "neighbor", "rank", "sim")
+      .as[(Long, Long, Int, Double)].collect().sortBy(r => (r._1, r._3)).toSeq
+    val exact = rows(Vectors.bruteForceTopK(corpus, "id", "vec", queries,
+      "qid", "qv", 5))
+    assert(exact.length === 20)
+    Seq[(String, () => DataFrame)](
+      "pqTopK" -> (() => Vectors.pqTopK(corpus, "id", "vec", queries,
+        "qid", "qv", 5)),
+      "ivfPqTopK" -> (() => Vectors.ivfPqTopK(corpus, "id", "vec", queries,
+        "qid", "qv", 5, nCells = 8, nProbe = 8)),
+      "sq8TopK" -> (() => Vectors.sq8TopK(corpus, "id", "vec", queries,
+        "qid", "qv", 5)),
+      "bqTopK" -> (() => Vectors.bqTopK(corpus, "id", "vec", queries,
+        "qid", "qv", 5))
+    ).foreach { case (name, run) =>
+      val got = rows(run())
+      assert(got.map(r => (r._1, r._2, r._3)) === exact.map(r => (r._1, r._2, r._3)),
+        name)
+      got.zip(exact).foreach { case (g, e) =>
+        assert(math.abs(g._4 - e._4) < 1e-12, s"$name: $g vs $e") }
+    }
+    graft.engine.Caches.releaseAll()
+  }
+
   test("scalarQuantize: error bounded at scale/2, constant vector round-trips to vmin") {
     val (corpus, _) = clustered
     val q = Vectors.scalarQuantize(corpus, "vec_id", "v")

@@ -2495,6 +2495,28 @@ class VersionedTableSpec extends SparkTestBase {
     assert(VersionedTable.readLatest(spark, root).orderBy("k").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSeq ===
       Seq((2L, 20L), (3L, 30L), (4L, 40L), (5L, 50L), (6L, 61L)))
+    // a shallow clone reads borrowed directories through its donor
+    // chain: each root's `_log/donor` is probed at most once per op,
+    // however many directories the op resolves
+    val cloneLocal =
+      new org.apache.hadoop.fs.Path(freshRoot("counted_clone")).toUri.getPath
+    val clone = s"${CountingFileSystem.Scheme}://$cloneLocal"
+    VersionedTable.cloneShallow(spark, root, clone)
+    VersionedTable.append(spark, clone, Seq((7L, 70L)).toDF("k", "v"))
+    VersionedTable.append(spark, clone, Seq((8L, 80L)).toDF("k", "v"))
+    assert(VersionedTable.dataDirsOf(spark, clone).size >= 3)
+    def donorProbes(body: => Any): Map[String, Int] =
+      CountingFileSystem.probedDuring(body).filter(_.endsWith("/_log/donor"))
+        .groupBy(identity).map { case (p, n) => p -> n.size }
+    val probes = Seq(
+      "readLatest" -> donorProbes(VersionedTable.readLatest(spark, clone).collect()),
+      "compact" -> donorProbes(VersionedTable.compact(spark, clone)))
+    probes.foreach { case (op, byRoot) =>
+      assert(byRoot.contains(s"$cloneLocal/_log/donor"), s"$op: $byRoot")
+      assert(byRoot.values.forall(_ <= 1), s"$op: $byRoot")
+    }
+    assert(VersionedTable.readLatest(spark, clone).orderBy("k").collect()
+      .map(_.getLong(0)).toSeq === Seq(2L, 3L, 4L, 5L, 6L, 7L, 8L))
   }
 
   test("changes, changesSince and versionDrift list _log once and read a manifest once") {
